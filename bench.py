@@ -52,6 +52,7 @@ def main() -> int:
     ).write.format("noop").mode("overwrite").save()
     # first-touch each remaining table (footer/schema read + file index)
     # so whichever query reads a table first isn't charged for it
+    from icnarc_to_philips_linkage_spark.plans.tables import clear_trained
     from icnarc_to_philips_linkage_spark.plans.tables import load as _load
 
     for t in ["region", "nation", "customer", "supplier", "part",
@@ -70,25 +71,6 @@ def main() -> int:
     # keep-min protocol that shrinks environment noise in the recorded
     # numbers. Default 1 preserves the driver's single-sweep contract.
     repeat = max(1, int(os.environ.get("BENCH_REPEAT", "1")))
-
-    def reset_memos() -> None:
-        # Keep-min honesty (VERDICT r12 #2): a few queries memoize a
-        # deterministic training artifact (GD/QR weights, PQ codebooks,
-        # the PCA direction, BPE merges) at module level so the
-        # FAMILY trains once per process — but across keep-min sweeps
-        # the memo made sweeps 2..n skip training entirely and the
-        # recorded minimum timed a query that never trained. Clear
-        # them between sweeps (next to clearCache) so every sweep
-        # pays the full computation. With the driver's repeat=1 this
-        # never fires — single-sweep semantics are unchanged.
-        from icnarc_to_philips_linkage_spark.plans import llm, relational
-
-        relational._GD_WEIGHTS_CACHE.clear()
-        relational._QR_CACHE.clear()
-        llm._PQ_BOOKS_CACHE.clear()
-        llm._PQ_INDEX_CACHE.clear()
-        llm._BPE_MERGE_CACHE.clear()
-        llm._PCA_CACHE.clear()
 
     def run_once(name: str) -> float:
         fn, _ = queries[name]
@@ -134,7 +116,8 @@ def main() -> int:
     done = 0
     for sweep in range(repeat):
         if sweep:
-            reset_memos()
+            # keep-min honesty (VERDICT r12 #2): sweeps 2..n retrain
+            clear_trained(spark)
         for name in selected:
             elapsed = run_once(name)
             if name not in timings or elapsed < timings[name]:

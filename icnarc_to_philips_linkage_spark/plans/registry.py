@@ -29,10 +29,11 @@ def all_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], s
 
 def exclusive_queries() -> frozenset[str]:
     """Names whose callables touch PROCESS-GLOBAL named state —
-    fixed-name temp views (the sql surface) or memo-guarded persisted
-    warehouse tables (the PQ index probes). Concurrent runners must
-    execute these serially; everything else is safe to interleave on
-    one SparkSession."""
+    fixed-name temp views (the sql surface) or persisted warehouse
+    tables named by their trained-artifact key (the PQ index probes:
+    two first builds of the same keyed table race the overwrite).
+    Concurrent runners must execute these serially; everything else is
+    safe to interleave on one SparkSession."""
     out: set[str] = set()
     for mod in _MODULES:
         out |= getattr(mod, "EXCLUSIVE", frozenset())

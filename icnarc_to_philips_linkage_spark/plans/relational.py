@@ -33,7 +33,7 @@ from icnarc_to_philips_linkage_spark.functions.expressions import (
     ts_micros,
 )
 from icnarc_to_philips_linkage_spark.operators import dedup, profile
-from icnarc_to_philips_linkage_spark.plans.tables import load, spread
+from icnarc_to_philips_linkage_spark.plans.tables import load, spread, trained
 
 # ---------------------------------------------------------------- flagship
 
@@ -5407,7 +5407,6 @@ FROM normed GROUP BY source
 
 _GD_LR, _GD_ITERS = 0.5, 5
 _GD_FEATURES = ["x_qty", "x_disc", "x_tax"]
-_GD_WEIGHTS_CACHE: dict = {}
 
 
 def _gd_feats(spark: SparkSession, sf: str) -> DataFrame:
@@ -5429,23 +5428,20 @@ def _gd_feats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@trained("lineitem")
 def _gd_trajectory(spark: SparkSession, sf: str) -> list:
-    """Trained GD trajectory (weights after EVERY iteration), memoized
-    per sf dir (the _pq_books discipline: training is deterministic —
-    same data → same weights bit-for-bit — so the classifier, the AUC
-    evaluation, the conformal calibration, and the cartography map all
-    share ONE training run; production trains once and reuses)."""
-    if sf not in _GD_WEIGHTS_CACHE:
-        from icnarc_to_philips_linkage_spark.operators import regression
+    """Trained GD trajectory (weights after EVERY iteration). Training
+    is deterministic and ten queries consume it, so they share one
+    training run."""
+    from icnarc_to_philips_linkage_spark.operators import regression
 
-        _GD_WEIGHTS_CACHE[sf] = regression.gd_train_trajectory(
-            _gd_feats(spark, sf),
-            _GD_FEATURES,
-            "y",
-            lr=_GD_LR,
-            iters=_GD_ITERS,
-        )
-    return _GD_WEIGHTS_CACHE[sf]
+    return regression.gd_train_trajectory(
+        _gd_feats(spark, sf),
+        _GD_FEATURES,
+        "y",
+        lr=_GD_LR,
+        iters=_GD_ITERS,
+    )
 
 
 def _gd_weights(spark: SparkSession, sf: str) -> list:
@@ -8566,7 +8562,6 @@ FROM agg
 
 
 _QR_TAU, _QR_LR, _QR_ITERS = 0.75, 0.5, 12
-_QR_CACHE: dict = {}
 
 
 def _qr_feats(spark: SparkSession, sf: str) -> DataFrame:
@@ -8583,19 +8578,18 @@ def _qr_feats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@trained("lineitem")
 def _qr_trajectory(spark: SparkSession, sf: str) -> list:
-    if sf not in _QR_CACHE:
-        from icnarc_to_philips_linkage_spark.operators import regression
+    from icnarc_to_philips_linkage_spark.operators import regression
 
-        _QR_CACHE[sf] = regression.quantile_gd_train_trajectory(
-            _qr_feats(spark, sf),
-            ["x_qty"],
-            "y_price",
-            tau=_QR_TAU,
-            lr=_QR_LR,
-            iters=_QR_ITERS,
-        )
-    return _QR_CACHE[sf]
+    return regression.quantile_gd_train_trajectory(
+        _qr_feats(spark, sf),
+        ["x_qty"],
+        "y_price",
+        tau=_QR_TAU,
+        lr=_QR_LR,
+        iters=_QR_ITERS,
+    )
 
 
 def ml_quantile_reg(spark: SparkSession, sf: str) -> DataFrame:

@@ -7,6 +7,10 @@ defaults), no inference pass.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +55,48 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # this cast keeps the same instant (wall clock == UTC instant)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+# Trained artifacts (model weights, codebooks, merge tables) by key.
+_TRAINED: dict = {}
+
+
+def artifact_key(builder, sf_dir: str, sources, params: tuple = ()) -> str:
+    """Name of a trained artifact, valid while the builder, its params,
+    ``sf_dir`` and the size and mtime of every ``sources`` table file are
+    unchanged: a table rewritten at the same path gets a new name and
+    retrains. Doubles as the warehouse name of an artifact kept in tables."""
+    stats = [(n, os.stat(f"{sf_dir}/{n}.parquet")) for n in sources]
+    key = (builder.__module__, builder.__qualname__, params, sf_dir,
+           [(n, st.st_size, st.st_mtime_ns) for n, st in stats])
+    return "trained_" + hashlib.md5(repr(key).encode()).hexdigest()[:16]
+
+
+def trained(*sources: str):
+    """Memoize ``builder(spark, sf_dir, *params)`` under ``artifact_key``:
+    each version of the ``sources`` tables trains once per process and
+    every consumer shares the one result."""
+
+    def wrap(builder):
+        @functools.wraps(builder)
+        def memo(spark: SparkSession, sf_dir: str, *params):
+            key = artifact_key(builder, sf_dir, sources, params)
+            if key not in _TRAINED:
+                _TRAINED[key] = builder(spark, sf_dir, *params)
+            return _TRAINED[key]
+
+        return memo
+
+    return wrap
+
+
+def clear_trained(spark: SparkSession) -> None:
+    """Forget every trained artifact, in memory and in the warehouse, so
+    the next consumer pays the full training (keep-min sweeps)."""
+    _TRAINED.clear()
+    for t in spark.catalog.listTables():
+        if t.name.startswith("trained_"):
+            spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
 
 
 def spread(df: DataFrame, *cols: str, min_parts: int | None = None) -> DataFrame:

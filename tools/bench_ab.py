@@ -35,6 +35,7 @@ def main() -> int:
     warm.limit(1000).groupBy("l_returnflag").count().write.format(
         "noop"
     ).mode("overwrite").save()
+    from icnarc_to_philips_linkage_spark.plans.tables import clear_trained
     from icnarc_to_philips_linkage_spark.plans.tables import load as _load
 
     for t in ["region", "nation", "customer", "supplier", "part",
@@ -42,26 +43,14 @@ def main() -> int:
         _load(spark, sf_dir, t).limit(1).write.format("noop").mode(
             "overwrite"
         ).save()
-    def reset_memos() -> None:
-        # keep-min honesty (VERDICT r12 #2): clear module-level
-        # training memos between repeats so every timed pass pays the
-        # full computation, mirroring bench.py
-        from icnarc_to_philips_linkage_spark.plans import llm, relational
-
-        relational._GD_WEIGHTS_CACHE.clear()
-        relational._QR_CACHE.clear()
-        llm._PQ_BOOKS_CACHE.clear()
-        llm._PQ_INDEX_CACHE.clear()
-        llm._BPE_MERGE_CACHE.clear()
-        llm._PCA_CACHE.clear()
-
     total = 0.0
     for name in names:
         fn, _ = queries[name]
         best = None
         for i in range(repeat):
             if i:
-                reset_memos()
+                # keep-min honesty: every timed pass pays the training
+                clear_trained(spark)
             t = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             el = time.time() - t
