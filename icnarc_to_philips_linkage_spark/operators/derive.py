@@ -56,15 +56,30 @@ def combine_date_time_columns(
     return out
 
 
+def _coalesce_present(df: DataFrame, cols: Sequence[str], dtype: str):
+    """Cascading coalesce over the ``cols`` the table carries. The XML
+    ingest prunes CMP codes no record holds (an export with no death in
+    the unit has no body-removed columns), so a missing source is all
+    NULL; with none present the result is a NULL of ``dtype``."""
+    present = [f"`{c}`" for c in cols if c in df.columns]
+    if not present:
+        return F.lit(None).cast(dtype)
+    return coalesce_cascade(*present)
+
+
 def derive_icnarc_outtime(df: DataFrame) -> DataFrame:
     """E3: unit out-time = discharge datetime, else body-removed datetime
     (clean_encounterids.py:260-272). The null-residual *warning* becomes
     a queryable column; callers can assert count_if(isNull) == 0."""
     return df.withColumn(
         "icnarc_outTime",
-        coalesce_cascade(
-            "`Datetime of discharge from your unit`",
-            "`Datetime body removed from your unit`",
+        _coalesce_present(
+            df,
+            (
+                "Datetime of discharge from your unit",
+                "Datetime body removed from your unit",
+            ),
+            "timestamp",
         ),
     )
 
@@ -79,10 +94,14 @@ def derive_mortality(df: DataFrame) -> DataFrame:
     (SURVEY §7)."""
     return df.withColumn(
         "mortality_status",
-        coalesce_cascade(
-            "`Status at ultimate discharge from hospital`",
-            "`Status at discharge from your hospital`",
-            "`Status at discharge from your unit`",
+        _coalesce_present(
+            df,
+            (
+                "Status at ultimate discharge from hospital",
+                "Status at discharge from your hospital",
+                "Status at discharge from your unit",
+            ),
+            "string",
         ),
     )
 

@@ -63,6 +63,55 @@ def test_xml_ingest_namespace_strip_and_pivot(spark, xml_path, cmp_properties):
     assert all(t == "string" for _, t in wide.dtypes)
 
 
+
+def test_icnarc_ingest_without_in_unit_death(spark, tmp_path):
+    """EP2 on an export where nobody died in the unit: the parser prunes
+    the body-removed codes (in the dimension, in no record), and the
+    out-time still derives as the discharge datetime; mortality
+    coalesces over the one status column the export carries."""
+    import datetime as dt
+
+    from icnarc_to_philips_linkage_spark.pipelines import run_icnarc_ingest
+
+    dim = spark.createDataFrame([
+        Row(CODE=c, Description=d) for c, d in [
+            ("ICNARCNO", "ICNARC Number"), ("CMPNO", "ICNARC CMP Number"),
+            ("SEX", "Sex"), ("DOB", "Date of Birth"),
+            ("HT", "Height in cm"), ("WT", "Weight in kg"),
+            ("DAU", "Date of admission to your unit"),
+            ("TAU", "Time of admission to your unit"),
+            ("DDU", "Date of discharge from your unit"),
+            ("TDU", "Time of discharge from your unit"),
+            ("DBRU", "Date body removed from your unit"),
+            ("TBRU", "Time body removed from your unit"),
+            ("SDU", "Status at discharge from your unit"),
+        ]
+    ])
+    patients = [
+        ("2015001", "H91", "2016-01-05", "10:00:00"),
+        ("2015002", "B16", "2016-02-03", "20:30:00"),
+    ]
+    body = "".join(
+        f"<patient><ICNARCNO>{n}</ICNARCNO><CMPNO>{u}</CMPNO><SEX>F</SEX>"
+        "<DOB>1966-01-01</DOB><HT>170</HT><WT>68</WT>"
+        "<DAU>2016-01-01</DAU><TAU>08:00:00</TAU>"
+        f"<DDU>{d}</DDU><TDU>{t}</TDU><SDU>A</SDU></patient>"
+        for n, u, d, t in patients
+    )
+    p = tmp_path / "alive.xml"
+    p.write_text(
+        '<?xml version="1.0"?>\n<export xmlns="http://icnarc.example/ns">'
+        f"{body}</export>"
+    )
+    out = run_icnarc_ingest(spark, str(p), dim)
+    assert "Datetime body removed from your unit" not in out.columns
+    rows = {r["ICNARC number"]: r for r in out.collect()}
+    assert rows[2015001]["icnarc_outTime"] == dt.datetime(2016, 1, 5, 10, 0)
+    assert rows[2015002]["icnarc_outTime"] == dt.datetime(2016, 2, 3, 20, 30)
+    assert all(r["mortality_status"] == "A" for r in rows.values())
+    assert rows[2015001]["icnarc_los"] == 4 * 24 * 60 + 2 * 60
+
+
 RPT = (
     "encounterId\tptCensusId\tinTime\n"
     "101\t1\t2016-01-01 10:00:00\n"
