@@ -87,10 +87,6 @@ def duration_minutes(end_ts: Column | str, start_ts: Column | str) -> Column:
     return (F.unix_timestamp(_col(end_ts)) - F.unix_timestamp(_col(start_ts))) / 60.0
 
 
-def duration_hours(end_ts: Column | str, start_ts: Column | str) -> Column:
-    return (F.unix_timestamp(_col(end_ts)) - F.unix_timestamp(_col(start_ts))) / 3600.0
-
-
 def minutes_to_days(c: Column | str) -> Column:
     return _col(c) / 1440.0
 

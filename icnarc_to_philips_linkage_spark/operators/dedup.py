@@ -92,13 +92,6 @@ def duplicate_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def rows_in_duplicate_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """The raw rows belonging to duplicated keys — a left-semi join against
-    the duplicate key set (no row explosion, dedup key set stays small)."""
-    dups = duplicate_groups(df, keys).select(*keys)
-    return df.join(dups, on=list(keys), how="left_semi")
-
-
 def uniqueness_check(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """A11: one row, ``n_rows`` / ``n_keys`` / ``is_unique`` — the engine
     form of the notebook's ``is_unique`` assert (cell 10)."""
@@ -156,13 +149,6 @@ def combine_non_unique_encounters(df: DataFrame, mode: str = "concat") -> DataFr
     return dedup_merge(
         df, ["CIS Patient ID Original"], policies, order_col="inTime"
     )
-
-
-def distinct_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact row-level dedup: ``dropDuplicates`` (hash shuffle on the
-    subset). For the deterministic 'keep earliest' variant use
-    ``dedup_merge`` with first-policies."""
-    return df.dropDuplicates(list(subset)) if subset else df.distinct()
 
 
 def debounce(

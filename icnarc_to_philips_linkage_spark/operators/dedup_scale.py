@@ -24,8 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from . import cachereg
 from pyspark.sql import types as T
 
 from icnarc_to_philips_linkage_spark.functions.expressions import (
@@ -797,10 +795,8 @@ def minhash_lsh_dedup(
     of OOMing on a 100 TB corpus)."""
     from pyspark import StorageLevel
 
-    sets = cachereg.track(
-        shingle_sets(df, id_col, text_col, n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    sets = shingle_sets(df, id_col, text_col, n).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     sig = minhash_signatures_arr(sets, id_col, k)
     cand = lsh_candidate_pairs(
@@ -974,7 +970,6 @@ def ngram_jaccard_dedup(
             F.transform("sh_arr", lambda s: F.md5(F.concat(F.lit("0:"), s)))
         ).alias("__block"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(blocked)
     a = blocked.select(
         F.col("__block"),
         F.col(id_col).alias("id_a"),
@@ -1270,7 +1265,6 @@ def jaccard_prefix_join(
         # rank join below — persist so tokenize/shingle (and any
         # upstream exchange) runs once, the minhash_lsh_dedup pattern
         toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-        cachereg.track(toks)
         flat = toks.select(
             F.col(id_col), F.explode("__tk").alias("__token")
         )
@@ -1314,7 +1308,6 @@ def jaccard_prefix_join(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(ordered)
     a = ordered.select(
         F.col(id_col).alias("id_a"),
         F.col("__tk").alias("__tka"),
@@ -1434,7 +1427,6 @@ def containment_prefix_join(
             ).alias("__tk"),
         )
     toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(toks)
     flat = toks.select(F.col(id_col), F.explode("__tk").alias("__token"))
     counts = flat.groupBy("__token").agg(F.count(F.lit(1)).alias("__cnt"))
     ranked = (
@@ -1452,7 +1444,6 @@ def containment_prefix_join(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(ranked)
     p, q = _threshold_ratio(threshold)
     a = ranked.select(
         F.col(id_col).alias("id_a"),
@@ -1602,7 +1593,6 @@ def jaccard_prefix_join_rs(
         ).withColumn("__n", F.size("__tk"))
     elif order_mode == "frequency":
         tl = tl.persist(StorageLevel.MEMORY_AND_DISK)
-        cachereg.track(tl)
         flat = tl.select("id_l", F.explode("__tk").alias("__token"))
         counts = flat.groupBy("__token").agg(
             F.count(F.lit(1)).alias("__cnt")
@@ -1654,9 +1644,7 @@ def jaccard_prefix_join_rs(
         )
 
     ol = _with_prefix(rl).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(ol)
     orr = _with_prefix(rr).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(orr)
     a = ol.select(
         "id_l",
         F.col("__n").alias("__na"),
@@ -1768,11 +1756,9 @@ def lsh_band_stats(
     for b in band_configs:
         if k % b:
             raise ValueError(f"bands={b} must divide k={k}")
-    sig = cachereg.track(
-        minhash_signatures_arr(
-            shingle_sets(df, id_col, text_col, n), id_col, k
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sig = minhash_signatures_arr(
+        shingle_sets(df, id_col, text_col, n), id_col, k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     outs = []
     for b in band_configs:
         r = k // b

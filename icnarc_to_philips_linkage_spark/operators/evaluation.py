@@ -589,9 +589,7 @@ def cohens_kappa(
     # pass. The persist is a k²+nulls-row cache, corpus-independent.
     from pyspark import StorageLevel
 
-    from . import cachereg
-
-    cont = cachereg.track(
+    cont = (
         df.groupBy(a.alias("__a"), b.alias("__b"))
         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("__c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -969,9 +967,7 @@ def confusion_report(
     # (classes×2, rows, cols, diag) each replayed the corpus pass.
     from pyspark import StorageLevel
 
-    from . import cachereg
-
-    cont = cachereg.track(
+    cont = (
         df.groupBy(g.alias("__g"), p.alias("__p"))
         .agg(F.count(F.lit(1)).alias("__c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1549,8 +1545,6 @@ def paired_bootstrap_delta_auc(
     y = F.col(label_col).cast("int")
     from pyspark import StorageLevel
 
-    from . import cachereg
-
     base = df.filter(
         s1.isNotNull()
         & s2.isNotNull()
@@ -1567,7 +1561,6 @@ def paired_bootstrap_delta_auc(
     # projection and the digests compute once, not twice (guide §5
     # reuse rule)
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(base)
     a1 = _boot_auc_by_resample(base, "__s1", b_n, round_dp)
     a2 = _boot_auc_by_resample(base, "__s2", b_n, round_dp).select(
         "__b", F.col("__auc").alias("__auc2")
@@ -2518,9 +2511,7 @@ def gwet_ac1(
     # integers.
     from pyspark import StorageLevel
 
-    from . import cachereg
-
-    cont = cachereg.track(
+    cont = (
         df.groupBy(r1.alias("__r1"), r2.alias("__r2"))
         .agg(F.count(F.lit(1)).alias("__c"))
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -30,8 +30,6 @@ from icnarc_to_philips_linkage_spark.operators.scale import (
     bounded_global_window,
 )
 
-from . import cachereg
-
 
 def funnel_steps(
     df: DataFrame,
@@ -159,7 +157,6 @@ def association_rules(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(inc)
     n_users = inc.select(user_col).distinct().count()
     marg = inc.groupBy(item_col).agg(F.count(F.lit(1)).alias("n_item"))
     a = inc.select(

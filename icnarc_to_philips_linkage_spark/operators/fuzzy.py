@@ -135,33 +135,6 @@ def fuzzy_join(
     )
 
 
-def deletion_variants(col: Column | str, normalized: bool = True) -> Column:
-    """FastSS deletion neighborhood D1(s): the string itself plus every
-    single-character deletion — array of length len(s)+1. Two strings
-    at edit distance <= 1 ALWAYS share a variant (substitution: delete
-    the differing position from both; indel: the shorter string is a
-    deletion of the longer; equality: the string itself), so an
-    equi-join on exploded variants is a COMPLETE candidate generator
-    for distance-1 matching. The converse does not hold (e.g. a
-    transposition shares a variant at distance 2), so candidates are
-    verified with the banded ``levenshtein`` afterwards."""
-    c = F.col(col) if isinstance(col, str) else col
-    if normalized:
-        c = F.regexp_replace(F.lower(c), r"[^a-z0-9]", "")
-    # substr seeks are O(position) but strings here are identifier-
-    # sized; the variant array is built once per row
-    return F.array_union(
-        F.array(c),
-        F.transform(
-            F.sequence(F.lit(1), F.length(c)),
-            lambda i: F.concat(
-                c.substr(F.lit(1), i - 1),
-                c.substr(i + 1, F.length(c)),
-            ),
-        ),
-    )
-
-
 def deletion_neighborhood_join(
     left: DataFrame,
     right: DataFrame,

@@ -69,8 +69,6 @@ def pagerank(
     # lineage so plan analysis stays O(1) in k.
     from pyspark import StorageLevel
 
-    from . import cachereg
-
     # assume_distinct skips the parallel-edge dedup when the CALLER
     # already guarantees uniqueness — dedup before any id decoration
     # (e.g. on raw integer key pairs) shuffles far narrower rows than
@@ -87,7 +85,6 @@ def pagerank(
     # edge set shuffles exactly once for the whole run. The rank join
     # is broadcast (narrow), so it cannot disturb the distribution.
     e = e.repartition(F.col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -170,7 +167,8 @@ def triangle_count(
     Output one row: ``(n_nodes, n_edges, n_triangles, n_wedges,
     transitivity)`` — NULL transitivity on a wedge-free graph.
 
-    The edge frame is PERSISTED (and registered with ``cachereg``):
+    The edge frame is PERSISTED (released by the caller's
+    ``clearCache()``, the rule in ``plans.tables``):
     ``und`` feeds four consumers (degree counts, the orientation join,
     the edge-count aggregate) and ``oriented`` three (both wedge sides
     plus the closing join) — without the pins every consumer replays
@@ -181,8 +179,6 @@ def triangle_count(
     """
     from pyspark import StorageLevel
 
-    from . import cachereg
-
     a = F.col(src_col).cast("string")
     b = F.col(dst_col).cast("string")
     und = (
@@ -192,7 +188,6 @@ def triangle_count(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(und)
     deg = (
         und.select(F.col("u").alias("n"))
         .unionAll(und.select(F.col("v").alias("n")))
@@ -200,7 +195,6 @@ def triangle_count(
         .agg(F.count(F.lit(1)).alias("d"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(deg)
     e = und.join(
         deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u"
     ).join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
@@ -212,7 +206,6 @@ def triangle_count(
         F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("dt"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(oriented)
     o1 = oriented.select(
         "s", F.col("t").alias("b"), F.col("dt").alias("db")
     )

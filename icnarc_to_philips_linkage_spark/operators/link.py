@@ -81,18 +81,3 @@ def decorate_events(
     (cell 54). Composite key is essential: attributeId 16240 ('Value')
     recurs across interventions (FIXTURES.md §6)."""
     return events.join(F.broadcast(interventions), on=list(on), how="left")
-
-
-def attach_stay_attribute(
-    per_stay_stats: DataFrame,
-    stays: DataFrame,
-    attrs: Sequence[str],
-    key: str = "encounterId",
-) -> DataFrame:
-    """J6: attach per-stay attributes (e.g. ICNARC LOS) to per-(stay,
-    variable) aggregates (cell 60) — inner join on the stay key, with
-    the stays side pruned to key+attrs before the join (the reference's
-    manual column pruning; Catalyst would do it anyway)."""
-    return per_stay_stats.join(
-        stays.select(key, *attrs), on=key, how="inner"
-    )

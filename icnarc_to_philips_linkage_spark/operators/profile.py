@@ -1546,9 +1546,7 @@ def spearman_corr(
     # grid-bounded, not corpus-bounded, so narrow is correct.
     from pyspark import StorageLevel
 
-    from icnarc_to_philips_linkage_spark.operators import cachereg
-
-    cells = cachereg.track(
+    cells = (
         filtered.groupBy(group_col, x_col, y_col)
         .agg(F.count(F.lit(1)).alias("__cc"))
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -283,25 +283,6 @@ def pinball_loss_expr(
     return r * (F.lit(tau) - ind)
 
 
-def gd_train_frame(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    lr: float = 0.5,
-    iters: int = 5,
-) -> DataFrame:
-    """``gd_train`` as a DataFrame: one row per coefficient,
-    ``(feature, weight)``, feature = 'intercept' or the column name,
-    in training order. The weights are plan literals — this frame is
-    k+1 rows by construction."""
-    w = gd_train(df, feature_cols, label_col, lr=lr, iters=iters)
-    spark = df.sparkSession
-    rows = [("intercept", w[0])] + [
-        (c, w[j + 1]) for j, c in enumerate(feature_cols)
-    ]
-    return spark.createDataFrame(rows, "feature string, weight double")
-
-
 def gd_score(
     df: DataFrame,
     feature_cols: list[str],

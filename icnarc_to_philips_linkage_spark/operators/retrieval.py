@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from icnarc_to_philips_linkage_spark.operators import cachereg
 from icnarc_to_philips_linkage_spark.operators.text import shingles, tokens
 
 
@@ -465,7 +464,6 @@ def mmr_rerank(
     cands = knn_brute_force(
         corpus, queries, k=pool, id_col=id_col, vec_col=vec_col
     ).coalesce(1).persist()
-    cachereg.track(cands)
     cv = corpus.select(
         F.col(id_col).alias("__cid"),
         F.col(vec_col).alias("__v"),
@@ -491,7 +489,6 @@ def mmr_rerank(
         .repartition(1)
         .persist()
     )
-    cachereg.track(with_vec)
     a = with_vec.select(
         "query_id",
         F.col("neighbor_id").alias("a_id"),
@@ -516,7 +513,6 @@ def mmr_rerank(
         .coalesce(1)
         .persist()
     )
-    cachereg.track(psim)
 
     # micro-unit integer views: sims are already on the 1e-6 grid
     # (6dp-rounded doubles), so ROUND(x·1e6) recovers the exact long

@@ -43,14 +43,6 @@ def extract_json_fields(
     return df.select(*cols)
 
 
-def from_json_typed(df: DataFrame, json_col: str, ddl_schema: str) -> DataFrame:
-    """Parse the whole JSON column into a struct with a declared schema
-    (``from_json``); unknown fields are dropped, missing fields are
-    NULL. Prefer this over repeated `get_json_object` when extracting
-    many fields — one parse instead of one per field."""
-    return df.withColumn("__parsed", F.from_json(F.col(json_col), ddl_schema))
-
-
 def json_stats(
     df: DataFrame,
     json_col: str,

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import cachereg
-
 
 def dot(a: Column | str, b: Column | str) -> Column:
     a = F.col(a) if isinstance(a, str) else a
@@ -479,7 +477,6 @@ def semantic_dedup(
         norm_sq(vec_col).alias("__nsq"),
         rh_lsh_signature(vec_col, planes).alias("cluster"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(hashed)
     a = hashed.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("vec_a"),
@@ -540,7 +537,6 @@ def knn_graph_lsh(
         norm_sq(vec_col).alias("__nsq"),
         rh_lsh_signature(vec_col, planes).alias("bucket"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cachereg.track(hashed)
     a = hashed.select(
         F.col(id_col).alias("node_id"),
         F.col(vec_col).alias("vec_a"),
@@ -979,13 +975,11 @@ def kcenter_coreset(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    base = cachereg.track(
-        corpus.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            norm_sq(vec_col).alias("__nsq"),
-        ).persist()
-    )
+    base = corpus.select(
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).alias("__v"),
+        norm_sq(vec_col).alias("__nsq"),
+    ).persist()
     seed = base.orderBy("__id").limit(1)
     picks = [
         seed.select(
@@ -1195,7 +1189,7 @@ def margin_bitext_mine(
     # pair — the bounded per-batch mining working set, no vectors.
     from pyspark import StorageLevel
 
-    pairs = cachereg.track(pairs.persist(StorageLevel.MEMORY_AND_DISK))
+    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     x_nn = (
         topk_per_key(pairs, "query_id", knn)
         .groupBy("query_id")

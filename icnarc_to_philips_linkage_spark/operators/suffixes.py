@@ -47,7 +47,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import cachereg
 from .scale import global_dense_rank, global_rank
 from .text import normalize_expr
 
@@ -193,7 +192,6 @@ def longest_repeated_sequences(
     cap = 1 << levels
     arrays, _ = token_positions(df, id_col, text_col)
     arrays = arrays.persist()
-    cachereg.track(arrays)
     ranks = suffix_rank(
         arrays, None, id_col, levels, partitions=partitions
     )

@@ -21,8 +21,6 @@ from icnarc_to_philips_linkage_spark.operators.scale import (
     bounded_global_window,
 )
 
-from . import cachereg
-
 # Deterministic marker lexicons for the language-ID heuristic. A real
 # deployment swaps in per-language character-n-gram profiles; the operator
 # shape (score per language → argmax with fixed priority) is unchanged.
@@ -57,10 +55,6 @@ def normalize_expr(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     stripped = F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", "")
     return F.trim(F.regexp_replace(stripped, r"\s+", " "))
-
-
-def _in_list_sql(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
 
 
 def marker_hits(toks_col: str, words: tuple[str, ...]) -> Column:
@@ -544,7 +538,6 @@ def ngram_lm_score(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(dg)
     model = dg.groupBy("gram").agg(F.sum("cnt").alias("gram_n"))
     total = model.agg(F.sum("gram_n").alias("total_n"))
     scored = (
@@ -605,7 +598,7 @@ def ccnet_perplexity_buckets(
     scored = ngram_lm_score(df, doc_id=doc_id, text_col=text_col, n=n)
     # both the threshold pass and the bucket pass read the scored
     # frame — persist it or the LM scoring join executes twice
-    s = cachereg.track(
+    s = (
         scored.join(df.select(doc_id, group_col), doc_id)
         .filter(F.col("bits_per_gram").isNotNull())
         .select(doc_id, group_col, "bits_per_gram")
@@ -714,7 +707,6 @@ def moore_lewis_scores(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cachereg.track(dg)
     model = dg.groupBy("gram").agg(
         F.sum("cnt").alias("all_n"),
         F.sum(F.when(F.col("__in"), F.col("cnt")).otherwise(0)).alias(

@@ -1385,8 +1385,6 @@ def _scored_with_label(spark: SparkSession, sf: str) -> DataFrame:
     # once, filter above it.
     from pyspark import StorageLevel
 
-    from icnarc_to_philips_linkage_spark.operators import cachereg
-
     lab = load(spark, sf, "documents").select(
         "doc_id", (F.col("n_chars") >= _EVAL_LABEL_CHARS).alias("label")
     )
@@ -1395,7 +1393,7 @@ def _scored_with_label(spark: SparkSession, sf: str) -> DataFrame:
         .join(lab, "doc_id")
         .select("doc_id", "p_quality", "label")
     )
-    return cachereg.track(scored.persist(StorageLevel.MEMORY_AND_DISK))
+    return scored.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def eval_roc_auc(spark: SparkSession, sf: str) -> DataFrame:
@@ -1688,8 +1686,6 @@ def curate_token_budget(spark: SparkSession, sf: str) -> DataFrame:
     fits. The budget scalar derives from one 1-row aggregate; the
     prefix sum is the distributed two-level pack_sequences shape, not
     a single-task global window."""
-    from icnarc_to_philips_linkage_spark.operators import cachereg
-
     # r12 optimization (guide §5/§8, §2.4): n_tokens and p_quality
     # both derive from ONE with_quality projection — the old shape
     # ran text_quality and quality_classifier_score as two separate
@@ -1709,7 +1705,7 @@ def curate_token_budget(spark: SparkSession, sf: str) -> DataFrame:
         + F.lit(_QCLS_W["stopword_ratio"]) * F.col("stopword_ratio"),
         9,
     )
-    docs = cachereg.track(
+    docs = (
         wq.select(
             "doc_id",
             "n_tokens",

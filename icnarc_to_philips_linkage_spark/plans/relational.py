@@ -3778,15 +3778,13 @@ def sketch_countmin_topk(spark: SparkSession, sf: str) -> DataFrame:
     the sketch. md5 hashing makes the sketch deterministic, so the
     estimates — including the est >= exact domination invariant — hash-
     match the DuckDB reconstruction exactly."""
-    from icnarc_to_philips_linkage_spark.operators import cachereg
-
     l = load(spark, sf, "lineitem")
     # the exact (key, count) grain feeds the top-k probe set AND the
     # sketch build below; persisting it means the eager top-k action
     # materializes it once and the sketch pass never re-aggregates
     # the corpus (r12 optimization, guide §5 reuse-beats-recompute —
     # the grain is two longs per key, the §8 "small rows" proxy)
-    exact = cachereg.track(
+    exact = (
         l.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("exact_n"))
         .persist()

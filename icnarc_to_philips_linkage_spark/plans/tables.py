@@ -99,6 +99,16 @@ def clear_trained(spark: SparkSession) -> None:
             spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
 
 
+# Plan caches have one lifecycle. A persist that the returned plan still
+# reads (an intermediate with several consumers) is released by whoever
+# runs the action, with ``spark.catalog.clearCache()``: bench.py, the
+# tools/ sweeps and the plan-fingerprint test do so after every query.
+# A persist used up inside the function is unpersisted there before it
+# returns (regression's GD and quantile-GD trainers, the PCA power
+# iteration, PQ training, connected_components' edges). Spark's storage lists
+# every live cache: ``spark.sparkContext._jsc.sc().getPersistentRDDs()``.
+
+
 def spread(df: DataFrame, *cols: str, min_parts: int | None = None) -> DataFrame:
     """Widen a narrow scan BEFORE a CPU-heavy projection runs on it.
 

@@ -21,12 +21,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Export-parity CSV sink (header on, like the reference's
-    ``to_csv``)."""
-    df.write.mode(mode).option("header", True).csv(path)
-
-
 def checkpoint_parquet(
     spark: SparkSession, df: DataFrame, path: str
 ) -> DataFrame:

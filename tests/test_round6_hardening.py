@@ -6,7 +6,7 @@
 3. llm.py oracle guards use TRY_CAST (checked via the oracle suite).
 4. event_replay rejects non-identifier orderBy and survives quoted
    paths (bind parameters, not string interpolation).
-5. long-lived plan caches are registered for explicit eviction.
+5. long-lived plan caches persist until the runner's clearCache().
 """
 
 import pytest
@@ -137,25 +137,24 @@ def test_event_replay_path_is_bind_parameter(spark, tmp_path):
     assert end == {"idx": 2} and len(list(rows)) == 2
 
 
-def test_cachereg_tracks_and_evicts_plan_caches(spark):
-    from icnarc_to_philips_linkage_spark.operators import cachereg, events
+def test_plan_cache_persists_until_clear_cache(spark):
+    from icnarc_to_philips_linkage_spark.operators import events
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     ev = spark.createDataFrame(
         [(1, "x"), (1, "y"), (2, "x"), (2, "y"), (3, "x")],
         "user_id bigint, item string",
     )
-    mark = cachereg.live()
     out = events.association_rules(ev, user_col="user_id", item_col="item")
-    out.collect()
-    assert cachereg.live() > mark  # the incidence cache got registered
-    tracked = cachereg._LIVE[mark:]
-    assert all(df.storageLevel.useMemory or df.storageLevel.useDisk
-               for df in tracked)
-    released = cachereg.evict(mark)
-    assert released >= 1
-    assert all(
-        not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        for df in tracked
-    )
-    # plan still valid after eviction (recomputes from lineage)
-    assert out.count() > 0
+    rows = sorted(map(tuple, out.collect()))
+    # the returned plan reads the persisted incidence table
+    cached = out._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" in cached
+    assert "StorageLevel(disk, memory" in cached
+    assert not cache_manager.isEmpty()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+    # plan still valid after the release (recomputes from lineage)
+    assert sorted(map(tuple, out.collect())) == rows
+    spark.catalog.clearCache()

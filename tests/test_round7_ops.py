@@ -1,5 +1,5 @@
 """Round-7 hardening tests: the fuzzy-linkage oversized-block guard,
-cache-registry eviction under repeated sweeps, and regression pins for
+plan-cache release under repeated sweeps, and regression pins for
 the operators whose determinism recipe changed while gaining full
 oracles (CUSUM quantization, PQ float32 codebooks, kmeans rounded
 distances, decontam per-corpus-doc screening)."""
@@ -8,7 +8,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from icnarc_to_philips_linkage_spark.operators import cachereg
 from icnarc_to_philips_linkage_spark.operators.fuzzy import (
     blocking_key,
     fuzzy_join,
@@ -81,37 +80,43 @@ def test_fuzzy_block_guard_off_matches_unguarded(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_cachereg_eviction_returns_storage_to_baseline(spark):
-    """VERDICT r6 #8: three bench-style sweeps over cache-registering
-    operators, asserting the JVM's persistent-RDD map returns to its
-    baseline after ``cachereg.evict()`` each sweep — the long-session
-    leak guard for the registry itself."""
+def test_clear_cache_returns_storage_to_baseline(spark):
+    """VERDICT r6 #8: three bench-style sweeps over operators whose
+    returned plans read a persisted intermediate, released the way every
+    runner releases them (``spark.catalog.clearCache()``). Each sweep
+    really caches, the JVM's persistent-RDD map returns to its baseline
+    after the release, the plans recompute afterwards, and no Python
+    ``DataFrame`` outlives the sweep — the long-session leak guard."""
+    import gc
+    import time
+
+    from pyspark.sql import DataFrame
+
     from tests.conftest import SF_SMOKE
 
     from icnarc_to_philips_linkage_spark.plans import llm
 
-    import time
-
     jsc = spark.sparkContext._jsc.sc()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     # order-independence: earlier tests in the session may have left
-    # registered caches (CacheManager would then dedupe our persists
-    # and the >baseline assertion below would see no growth) — start
-    # from a clean slate
-    cachereg.evict()
+    # plan caches (CacheManager would then dedupe our persists and the
+    # sweep would cache nothing new) — start from a clean slate
     spark.catalog.clearCache()
-    # localCheckpoint RDDs (kcenter/mmr/pagerank rounds) are NOT in
-    # cachereg or the catalog — they release via ContextCleaner once
-    # the Python-side DataFrames are garbage collected. Force both
-    # collectors so leftovers from earlier tests drain NOW instead of
-    # mid-sweep (observed: a leftover collected during the sweep made
-    # the count drop BELOW the inflated baseline)
-    import gc
-
+    # localCheckpoint RDDs (kcenter/mmr/pagerank rounds) are NOT in the
+    # catalog — they release via ContextCleaner once the Python-side
+    # DataFrames are garbage collected. Force both collectors so
+    # leftovers from earlier tests drain NOW instead of mid-sweep
+    # (observed: a leftover collected during the sweep made the count
+    # drop BELOW the inflated baseline)
     gc.collect()
     spark.sparkContext._jvm.System.gc()
 
     def n_persistent() -> int:
         return jsc.getPersistentRDDs().size()
+
+    def n_frames() -> int:
+        gc.collect()
+        return sum(isinstance(o, DataFrame) for o in gc.get_objects())
 
     def settles_at_most(target: int, timeout_s: float = 10.0) -> bool:
         # unpersist is asynchronous (blocking=False) — poll briefly;
@@ -138,28 +143,24 @@ def test_cachereg_eviction_returns_storage_to_baseline(spark):
         elif time.time() - stable_since >= 1.5:
             break
     baseline = last
+    frames_before = n_frames()
     for _ in range(3):
-        mark = cachereg.live()
         pre = n_persistent()  # fresh floor per sweep — GC may have
         # drained stragglers since the last iteration
-        llm.dedup_minhash_lsh(spark, SF_SMOKE).count()
-        llm.quality_ngram_lm(spark, SF_SMOKE).count()
-        # the sweep really cached: check the REGISTERED frames
-        # directly — a global persistent-RDD count races with
-        # ContextCleaner draining earlier tests' checkpoint RDDs
-        # (observed both directions of that flake)
-        new_caches = cachereg._LIVE[mark:]
-        assert new_caches, "sweep registered no caches"
-        assert any(
-            df.storageLevel.useMemory or df.storageLevel.useDisk
-            for df in new_caches
-        ), "registered frames are not actually persisted"
-        cachereg.evict(mark)
-        assert all(
-            not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-            for df in new_caches
-        ), "evict left a registered cache persisted"
+        lsh = llm.dedup_minhash_lsh(spark, SF_SMOKE)
+        lm = llm.quality_ngram_lm(spark, SF_SMOKE)
+        counts = (lsh.count(), lm.count())
+        # the sweep really cached: the catalog's cache manager was
+        # emptied above, so anything in it now is the sweep's persists
+        assert not cache_manager.isEmpty(), "sweep persisted nothing"
+        spark.catalog.clearCache()
+        assert cache_manager.isEmpty(), "clearCache left a plan cache"
         assert settles_at_most(max(baseline, pre))
+        # plans still valid after the release (recompute from lineage)
+        assert (lsh.count(), lm.count()) == counts
+        spark.catalog.clearCache()
+        del lsh, lm
+        assert n_frames() <= frames_before, "a DataFrame outlived the sweep"
 
 
 def test_cusum_z_quantization_is_6dp(spark):

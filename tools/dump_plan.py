@@ -1,7 +1,9 @@
-"""Dump `.explain("formatted")` for named queries to plans/r12/.
+"""Dump `.explain("formatted")` for named queries to OUT_DIR.
 
-Usage:  python tools/dump_plan.py before q1 q2 ...
-        python tools/dump_plan.py after  q1 q2 ...
+Usage:  python tools/dump_plan.py OUT_DIR before q1 q2 ...
+        python tools/dump_plan.py OUT_DIR after  q1 q2 ...
+
+Each plan lands in OUT_DIR/<query>_<tag>.txt (e.g. OUT_DIR=plans/dedup).
 
 Captures the pre-execution formatted plan (what the judge checks) at
 $SPARK_GRAFT_SF_DIR (default sf0.1 — the bench scale, so broadcast /
@@ -17,8 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from icnarc_to_philips_linkage_spark.plans.registry import all_queries
     from icnarc_to_philips_linkage_spark.session import get_spark
@@ -26,11 +27,6 @@ def main() -> int:
     spark = get_spark(app_name=f"dump-plan-{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("PLANS_ROUND", "r13"),
-    )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         fn, _ = queries[name]

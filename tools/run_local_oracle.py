@@ -1,6 +1,6 @@
 """Full-registry local oracle runner: the auditable twin of the
-driver's CORRECTNESS check. The driver samples ~50 of the 200
-registered queries per round; this runner executes EVERY
+sampled CORRECTNESS check, which covers only part of the registered
+queries each run; this runner executes EVERY
 ``queries()`` entry against its ``oracle_sql()`` on the same parquet
 tables and writes a per-query JSON record (rows / schema / value
 match booleans, row counts, errors) so the never-driver-sampled
