@@ -21,12 +21,12 @@ DuckDB oracle that unrolls the iterations (plans/llm.py _kmeans_sql).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icnarc_to_philips_linkage_spark.operators.scale import (
-    bounded_global_partition,
     bounded_global_window,
+    width,
 )
 
 from icnarc_to_philips_linkage_spark.operators.similarity import norm_sq
@@ -164,18 +164,14 @@ def power_iteration_top_pc(
     """
     import math
 
-    from icnarc_to_philips_linkage_spark.operators.regression import (
-        _qint,
-        _train_width,
-    )
+    from icnarc_to_philips_linkage_spark.operators.regression import _qint
 
-    # Persisted at bounded width (the gd_train discipline): the loop
-    # re-scans this frame every iteration, so width = cores/4 keeps
-    # the per-iteration CPU parallel without core-wide fixed costs.
+    # Persisted at the training width (scale.width): the loop re-scans
+    # this frame every iteration.
     base = (
         df.select(F.col(vec_col).alias("__v"))
         .filter(F.col("__v").isNotNull() & (F.size("__v") == dim))
-        .repartition(_train_width(df))
+        .repartition(width(df.sparkSession, 4))
         .persist()
     )
     v = [1.0 / math.sqrt(float(dim))] * dim

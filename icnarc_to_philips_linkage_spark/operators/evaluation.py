@@ -1269,41 +1269,11 @@ _BOOT_PMF_CUM = (
 )
 
 
-def _boot_weight_col(key_col: str, salt: str, b: int):
-    """~Poisson(1) replication weight for resample ``b`` (Chamandy et
-    al. 2012 truncated pmf): four independent 8-hex bands per md5
-    digest — resample b reads slice (b mod 4) of digest (b div 4),
-    4× fewer digests per row than one-md5-per-resample (measured the
-    dominant cost at B=20), same uniform bands. Deterministic,
-    partition-invariant, bit-replayable in the oracle."""
-    from icnarc_to_philips_linkage_spark.operators.sampling import (
-        _threshold_hex,
-    )
-
-    t0, t1, t2 = (_threshold_hex(x) for x in _BOOT_PMF_CUM)
-    u = F.substring(
-        F.md5(
-            F.concat(
-                F.lit(f"{salt}:{b // 4}:"),
-                F.col(key_col).cast("string"),
-            )
-        ),
-        1 + 8 * (b % 4),
-        8,
-    )
-    return (
-        F.when(u < t0, F.lit(0))
-        .when(u < t1, F.lit(1))
-        .when(u < t2, F.lit(2))
-        .otherwise(F.lit(3))
-        .cast("long")
-    )
-
-
 def _boot_digests_col(key_col: str, salt: str, b_n: int):
     """Concatenated md5 digests covering ``b_n`` resample bands — the
     per-ROW cost of the Poisson-bootstrap weights (⌈B/4⌉ digests; each
-    digest serves four 8-hex bands, as in ``_boot_weight_col``).
+    digest serves four 8-hex bands, decoded by
+    ``_boot_weight_from_digests``).
     Computing the digests once per row and DECODING per exploded
     (row, resample) pair is the ``paired_permutation_test`` recipe:
     the projection stays O(1) columns wide, so Catalyst analysis and
@@ -1324,10 +1294,12 @@ def _boot_digests_col(key_col: str, salt: str, b_n: int):
 
 
 def _boot_weight_from_digests(b_expr, digests_col: str = "__d"):
-    """Decode resample ``b``'s ~Poisson(1) band weight from the
-    concatenated digests (band layout identical to
-    ``_boot_weight_col``: resample b reads slice (b mod 4) of digest
-    (b div 4), i.e. chars [32·(b div 4) + 8·(b mod 4) + 1, +8))."""
+    """Decode resample ``b``'s ~Poisson(1) replication weight (Chamandy
+    et al. 2012 truncated pmf) from the concatenated digests: four
+    independent 8-hex bands per md5 digest — resample b reads slice
+    (b mod 4) of digest (b div 4), i.e. chars
+    [32·(b div 4) + 8·(b mod 4) + 1, +8). Deterministic,
+    partition-invariant, bit-replayable in the oracle."""
     t0, t1, t2 = (_threshold_hex_cached(x) for x in _BOOT_PMF_CUM)
     u = F.substring(
         F.col(digests_col),
@@ -1619,7 +1591,7 @@ def paired_permutation_test(
     the orbit; no fixed-margin machinery is needed, unlike the
     unpaired relabeling test). Signs are md5 hex-digit bits keyed by
     (salt, b//32, key) with resample b reading digit b%32 - the
-    Poisson-bootstrap band discipline (_boot_weight_col) at 1 bit:
+    Poisson-bootstrap band discipline (_boot_weight_from_digests) at 1 bit:
     deterministic, partition-invariant, bit-replayable in the oracle.
 
     T = sum(d_i) on the 1e-6 integer grid (exact decimal sums); the

@@ -17,6 +17,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from icnarc_to_philips_linkage_spark.operators.scale import width
+
 
 def blocking_key(col: Column | str, prefix_len: int = 4) -> Column:
     """Cheap block key: lowercased alphanumeric prefix. Swap for a
@@ -118,9 +120,7 @@ def fuzzy_join(
     # compare loop, quadratic CPU on tiny bytes, which AQE cannot see
     # (measured: 3.9 s single-task stage vs spread across the cluster).
     # An explicit numPartitions is exempt from AQE coalescing.
-    l = l.repartition(
-        l.sparkSession.sparkContext.defaultParallelism, "__blk"
-    )
+    l = l.repartition(width(l.sparkSession), "__blk")
     return (
         l.join(r, on="__blk")
         # 3-arg levenshtein: banded DP that early-exits past the

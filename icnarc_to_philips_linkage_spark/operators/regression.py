@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icnarc_to_philips_linkage_spark.operators.scale import width
+
 GRID = 1e12
 
 
@@ -48,20 +50,6 @@ def fast_sigmoid(z):
     """σ(z) = 0.5·(1 + z/(1+|z|)) — the arithmetic-only squashing
     function (range (0,1), σ(0)=0.5), bit-identical across engines."""
     return F.lit(0.5) * (F.lit(1.0) + z / (F.lit(1.0) + F.abs(z)))
-
-
-def _train_width(df: DataFrame) -> int:
-    """Partition width for the PERSISTED training frame that an
-    iterative driver loop re-scans every iteration. Bounded low on
-    purpose: each iteration is one map-combined aggregation whose
-    per-task fixed costs (launch, plan, collect) scale with this
-    width, so core-wide frames anti-scale — r12 spread the scan to
-    defaultParallelism and ml_gd_classifier ran 19.4 s at 32 cores vs
-    6.8 s at 8 (VERDICT r12 #2); width 1 (the raw single-row-group
-    scan) serializes the decimal-sum CPU instead (~1 s × iters).
-    cores/4 keeps real parallelism for the per-iteration CPU while
-    capping the fixed costs, and still grows with the hardware."""
-    return max(4, df.sparkSession.sparkContext.defaultParallelism // 4)
 
 
 def gd_train(
@@ -125,7 +113,7 @@ def gd_train_trajectory(
     feats = (
         df.filter(cond)
         .select(*cols, F.col(label_col).cast("double").alias("__y"))
-        .repartition(_train_width(df))
+        .repartition(width(df.sparkSession, 4))
         .persist()
     )
     try:
@@ -214,7 +202,7 @@ def quantile_gd_train_trajectory(
     feats = (
         df.filter(cond)
         .select(*cols, F.col(y_col).cast("double").alias("__y"))
-        .repartition(_train_width(df))
+        .repartition(width(df.sparkSession, 4))
         .persist()
     )
     try:

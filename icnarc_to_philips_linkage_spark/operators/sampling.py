@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from icnarc_to_philips_linkage_spark.operators.scale import (
     bounded_global_partition,
     bounded_global_window,
+    width,
 )
 
 _HEX_SPACE = 16**8  # the 8-hex-char prefix spans [0, 16^8)
@@ -697,7 +698,7 @@ def select_token_budget(
     base = df.filter(
         F.col(quality_col).isNotNull() & (F.col(tokens_col) > 0)
     ).select(id_col, quality_col, tokens_col)
-    n_parts = partitions or base.sparkSession.sparkContext.defaultParallelism
+    n_parts = partitions or width(base.sparkSession)
     ranged = base.repartitionByRange(
         n_parts, F.desc(quality_col), F.asc(id_col)
     ).sortWithinPartitions(F.desc(quality_col), F.asc(id_col))

@@ -51,27 +51,23 @@ from .scale import global_dense_rank, global_rank
 from .text import normalize_expr
 
 
-def token_positions(
+def token_arrays(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """(per-doc normalized token arrays, exploded 1-based positions).
-    Normalization = ``normalize_expr`` (lowercase, strip non-alnum,
-    collapse whitespace): tokens are then pure [a-z0-9]+, which makes
-    the oracle's space-joined suffix-string order provably equal to
-    token-sequence order (separator sorts below every token char)."""
-    arrays = df.select(
+) -> DataFrame:
+    """Per-doc normalized token arrays ``(id, toks)``, empty docs
+    dropped. Normalization = ``normalize_expr`` (lowercase, strip
+    non-alnum, collapse whitespace): tokens are then pure [a-z0-9]+,
+    which makes the oracle's space-joined suffix-string order provably
+    equal to token-sequence order (separator sorts below every token
+    char)."""
+    return df.select(
         F.col(id_col),
         F.split(normalize_expr(text_col), " ").alias("toks"),
     ).filter((F.size("toks") > 0) & (F.element_at("toks", 1) != ""))
-    positions = arrays.select(
-        F.col(id_col), F.posexplode("toks").alias("pos0", "tok")
-    ).select(F.col(id_col), (F.col("pos0") + 1).alias("off"), "tok")
-    return arrays, positions
 
 
 def suffix_rank(
     arrays: DataFrame,
-    positions: DataFrame | None = None,
     id_col: str = "doc_id",
     levels: int = 6,
     base_level: int = 4,
@@ -116,12 +112,9 @@ def suffix_rank(
       same bound the old (id, off) join keys had — no skew regression
       at scale.
 
-    ``positions`` is accepted for backwards compatibility and ignored
-    (the base pass derives positions from ``arrays`` itself).
-
     REJECTED refinement (measured round 12): pinning the rank passes
     to an explicit data-derived partition count
-    (``max(defaultParallelism, n_pos/128k)``) to stop AQE's
+    (``max(cores, n_pos/128k)``) to stop AQE's
     byte-targeted coalescing narrowing the checkpointed frames to 3-7
     tasks. Interleaved keep-min A/B at sf0.1: explicit widths 10.4-10.8 s
     vs 9.0-9.7 s leaving AQE alone — the extra 32-way sampling + sort
@@ -190,11 +183,8 @@ def longest_repeated_sequences(
     per adjacent suffix pair, ranked by LCP:
     (doc_a, off_a, doc_b, off_b, lcp_tokens, excerpt)."""
     cap = 1 << levels
-    arrays, _ = token_positions(df, id_col, text_col)
-    arrays = arrays.persist()
-    ranks = suffix_rank(
-        arrays, None, id_col, levels, partitions=partitions
-    )
+    arrays = token_arrays(df, id_col, text_col).persist()
+    ranks = suffix_rank(arrays, id_col, levels, partitions=partitions)
     sa = global_rank(
         ranks, ["r", id_col, "off"], rank_col="__idx", partitions=partitions
     ).select(F.col(id_col), "off", "__idx")

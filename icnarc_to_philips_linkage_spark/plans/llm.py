@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icnarc_to_philips_linkage_spark.operators.scale import (
-    bounded_global_partition,
     bounded_global_window,
+    spread,
 )
 
 from icnarc_to_philips_linkage_spark.operators import (
@@ -28,7 +28,7 @@ from icnarc_to_philips_linkage_spark.operators import (
     text,
 )
 from icnarc_to_philips_linkage_spark.operators.text import LANG_MARKERS, STOPWORDS
-from icnarc_to_philips_linkage_spark.plans.tables import load, spread, trained
+from icnarc_to_philips_linkage_spark.plans.tables import load, trained
 
 DIM = 64  # embedding width in the testdata
 KNN_QUERY_LIMIT = 10  # vec_id < 10 are the query vectors

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from icnarc_to_philips_linkage_spark.operators.scale import (
     bounded_global_partition,
     bounded_global_window,
+    spread,
+    width,
 )
 
 from icnarc_to_philips_linkage_spark.functions.expressions import (
@@ -33,7 +35,7 @@ from icnarc_to_philips_linkage_spark.functions.expressions import (
     ts_micros,
 )
 from icnarc_to_philips_linkage_spark.operators import dedup, profile
-from icnarc_to_philips_linkage_spark.plans.tables import load, spread, trained
+from icnarc_to_philips_linkage_spark.plans.tables import load, trained
 
 # ---------------------------------------------------------------- flagship
 
@@ -1808,7 +1810,7 @@ def fuzzy_jaro_winkler(spark: SparkSession, sf: str) -> DataFrame:
         # explicit count: AQE would coalesce the ~5 MB pair shuffle to
         # a handful of tasks, serializing the per-pair Python UDF work
         # that the bytes don't predict
-        spark.sparkContext.defaultParallelism,
+        width(spark),
         F.col("c_custkey"),
         F.col("match_key"),
     )
@@ -3409,30 +3411,15 @@ def graph_pagerank_parts(spark: SparkSession, sf: str) -> DataFrame:
     arithmetic (rank × 10^12 as BIGINT, integer DIV per out-edge) so
     the ranks are bit-exact across engines. Top-20 nodes by rank.
 
-    Runs in a CLONED session (readers.py pattern) with a CORE-DERIVED
-    shuffle-partition count (cores/2, floor 4): the conf does double
-    duty — it sizes the node-grain reduce stages of the loop (where
-    fewer tasks mean less launch overhead) AND the partition count of
-    the persisted edge cache that every per-iteration join/aggregate
-    scans (where too few tasks serialize real CPU work: at 4
-    partitions the per-iteration stages ran 4-way on a 32-core box,
-    ~2 s of single-stage CPU each). cores/2 was the measured optimum
-    at sf0.1 (4/8/16/32 → 5.0/5.7/4.1/7.3 s keep-min); at real scale
-    defaultParallelism grows with the cluster so the knob keeps
-    sizing the rank shuffles to the hardware, not to this testbed."""
+    Runs in a CLONED session (readers.py pattern) whose shuffle-partition
+    count is ``width(spark, 8)``: it sizes both the node-grain reduce
+    stages of the loop and the persisted edge cache every iteration
+    scans, and per-iteration fixed costs (task launch, broadcast
+    deserialization of the rank map) scale with it."""
     from icnarc_to_philips_linkage_spark.operators.graph import pagerank
 
     scoped = spark.newSession()
-    # CORE-DERIVED but NARROW (cores/8, floor 4): every shuffle in
-    # the loop is over |node|-sized frames, so per-iteration fixed
-    # costs (task launch, broadcast deserialization of the rank map)
-    # scale with this width. r12's cores/2 pin regressed 0.81× in the
-    # driver bench AND the keep-min (VERDICT r12 #4) — its 16-is-
-    # optimal sweep did not survive the cold repeat=1 protocol. At
-    # real scale defaultParallelism grows with the cluster so the
-    # knob still sizes the node-grain shuffles to the hardware.
-    pr_par = max(4, spark.sparkContext.defaultParallelism // 8)
-    scoped.conf.set("spark.sql.shuffle.partitions", str(pr_par))
+    scoped.conf.set("spark.sql.shuffle.partitions", str(width(spark, 8)))
     l = load(scoped, sf, "lineitem")
     # dedup the RAW integer key pairs, then decorate: the distinct
     # shuffles two ints per row instead of two concatenated strings,

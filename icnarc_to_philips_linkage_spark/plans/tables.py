@@ -109,42 +109,6 @@ def clear_trained(spark: SparkSession) -> None:
 # every live cache: ``spark.sparkContext._jsc.sc().getPersistentRDDs()``.
 
 
-def spread(df: DataFrame, *cols: str, min_parts: int | None = None) -> DataFrame:
-    """Widen a narrow scan BEFORE a CPU-heavy projection runs on it.
-
-    Parquet splits only at row-group boundaries, so a table written as
-    one file with one row group scans as ONE partition regardless of
-    ``spark.sql.files.maxPartitionBytes`` — and every map-side
-    transform chained onto that scan (shingling, vector arithmetic,
-    regex tokenization) executes in a single task. Queries whose cost
-    is per-row compute rather than shuffle lose the whole cluster to
-    file layout.
-
-    The check is driver-side metadata only (``getNumPartitions`` plans
-    the scan; no job runs): when the scan already has at least the
-    session's default parallelism — the normal case at real scale,
-    where a 100 TB table is thousands of files — this is a NO-OP and
-    adds nothing to the plan. Only a narrow scan pays one extra
-    exchange of the RAW rows, placed below the expensive projection
-    (callers apply it to the loaded table, not the derived plan —
-    Catalyst would otherwise put the exchange above the projection and
-    parallelize nothing).
-
-    With ``cols``, placement hash-partitions on those columns
-    (deterministic row→partition mapping, no round-robin local sort);
-    bare calls round-robin. Either way results are partition-order
-    independent: every consumer in this repo aggregates, joins, or
-    rounds to fixed decimals before comparison.
-    """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    if cols:
-        return df.repartition(target, *[F.col(c) for c in cols])
-    return df.repartition(target)
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Temp views for the Spark SQL surface (SURVEY §7 sql/views)."""
     for t in TABLES:

@@ -19,9 +19,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# local[N] test default; a real cluster overrides via spark-submit conf.
-_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_spark(
     app_name: str = "icnarc_to_philips_linkage_spark",
@@ -34,6 +31,8 @@ def get_spark(
     ``master=None`` defers to spark-submit / an existing session, falling
     back to ``local[N]`` for standalone use.
     """
+    # local[N] core count, also the default shuffle-partition count; a
+    # real cluster overrides both via spark-submit conf.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -45,7 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Arrow for every pandas-interop boundary (grouped-map ops, reports).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -88,8 +87,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

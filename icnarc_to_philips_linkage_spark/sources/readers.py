@@ -103,8 +103,7 @@ def read_excel_dim(
     properties). Driver-side pandas/openpyxl read → createDataFrame:
     these dims are broadcast-sized by construction (≤ hundreds of rows),
     so a distributed scan would be pure overhead. Requires openpyxl;
-    raises a clear error when absent (not installed in this container —
-    tests exercise the DataFrame path via ``dim_from_rows``)."""
+    raises a clear error when absent."""
     try:
         import pandas as pd
     except ImportError as e:  # pragma: no cover
@@ -117,16 +116,6 @@ def read_excel_dim(
             "load the dimension another way or install openpyxl"
         ) from e
     return spark.createDataFrame(pdf)
-
-
-def dim_from_rows(
-    spark: SparkSession, rows: list[dict], schema: StructType | str | None = None
-) -> DataFrame:
-    """Dimension constructor for literal/in-memory dims (tests, decode
-    tables). Always broadcast-sized."""
-    if schema is not None:
-        return spark.createDataFrame(rows, schema)
-    return spark.createDataFrame(rows)
 
 
 def read_jdbc_pushdown(

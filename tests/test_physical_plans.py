@@ -576,7 +576,7 @@ def test_perm_paired_single_aggregation_no_join(spark):
     """B=64 sign resamples must ride ONE corpus aggregation — no
     joins, no corpus-grain exchange beyond the salt-group reduction.
     Up to four exchanges allowed since the r12 exact-sum rewrite:
-    an adaptive spread of the narrow scan (tables.spread — no-op at
+    an adaptive spread of the narrow scan (scale.spread — no-op at
     real scale), corpus → (salt-group, resample) long partials,
     partials → per-resample decimal sums, → scalar; every
     post-corpus exchange carries ≤ n_groups·B tiny rows."""

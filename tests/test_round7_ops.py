@@ -677,39 +677,6 @@ def test_new_ops_degenerate_inputs(spark):
     assert [r.s for r in rows] == [None, None, 1.0]
 
 
-def test_spread_widens_narrow_scans_only(spark):
-    """tables.spread: a scan narrower than the target gains exactly a
-    repartition to the session parallelism; an input already at or
-    above the target passes through UNTOUCHED (same plan object — at
-    real scale the metadata check makes it a no-op); results are
-    row-identical either way."""
-    from icnarc_to_philips_linkage_spark.plans.tables import spread
-
-    narrow = spark.range(0, 1000, 1, 2).withColumn(
-        "k", F.pmod("id", F.lit(7))
-    )
-    wide = spread(narrow, "id")
-    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    assert sorted(r.id for r in wide.collect()) == list(range(1000))
-
-    already = spark.range(0, 1000, 1, spark.sparkContext.defaultParallelism)
-    assert spread(already) is already
-
-    assert spread(narrow, min_parts=2) is narrow  # meets the floor
-
-    # hash placement is deterministic: two spreads of the same input
-    # put every row in the same partition
-    import pyspark.sql.functions as SF
-
-    p1 = spread(narrow, "id").select(
-        "id", SF.spark_partition_id().alias("p")
-    ).collect()
-    p2 = spread(narrow, "id").select(
-        "id", SF.spark_partition_id().alias("p")
-    ).collect()
-    assert {r.id: r.p for r in p1} == {r.id: r.p for r in p2}
-
-
 def _rs_corpora(spark):
     """Train corpus with planted near-copies of two bench docs, plus a
     bench-only vocabulary doc (its tokens never occur in train — the

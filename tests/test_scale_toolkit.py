@@ -144,6 +144,54 @@ def test_lsh_index_bucketed_probe_no_corpus_shuffle(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_spread_widens_narrow_scans_only(spark):
+    """scale.spread: a scan narrower than ``width(spark)`` gains exactly
+    a repartition to that width; an input already at or above it
+    passes through UNTOUCHED (same plan object — at real scale the
+    metadata check makes it a no-op); results are row-identical either
+    way."""
+    narrow = spark.range(0, 1000, 1, 2).withColumn(
+        "k", F.pmod("id", F.lit(7))
+    )
+    wide = scale.spread(narrow, "id")
+    assert wide.rdd.getNumPartitions() == scale.width(spark)
+    assert sorted(r.id for r in wide.collect()) == list(range(1000))
+
+    already = spark.range(0, 1000, 1, scale.width(spark))
+    assert scale.spread(already) is already
+
+    # hash placement is deterministic: two spreads of the same input
+    # put every row in the same partition
+    p1 = scale.spread(narrow, "id").select(
+        "id", F.spark_partition_id().alias("p")
+    ).collect()
+    p2 = scale.spread(narrow, "id").select(
+        "id", F.spark_partition_id().alias("p")
+    ).collect()
+    assert {r.id: r.p for r in p1} == {r.id: r.p for r in p2}
+
+
+def test_core_count_is_read_only_by_width():
+    """One partition-width policy: ``defaultParallelism`` appears in the
+    package only inside ``scale.width``, so no plan picks its own
+    core-derived width (and none can skip the floor of 4)."""
+    import inspect
+    import pathlib
+
+    src, start = inspect.getsourcelines(scale.width)
+    inside = range(start, start + len(src))
+    root = pathlib.Path(scale.__file__).resolve().parent.parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "defaultParallelism" in line and not (
+                path.samefile(scale.__file__) and no in inside
+            ):
+                stray.append(f"{path.relative_to(root)}:{no}")
+    assert not stray, stray
+    assert any("defaultParallelism" in line for line in src)
+
+
 def test_global_rank_is_total_order_permutation(spark):
     from icnarc_to_philips_linkage_spark.operators.scale import global_rank
 
