@@ -145,6 +145,23 @@ def decimal_sum(c: Column | str, precision: int = 28, scale: int = 4) -> Column:
     return F.sum(_col(c).cast(f"decimal({precision},{scale})")).cast("double")
 
 
+# Quantizer step of ``quantize_exact``: a contribution is counted in
+# units of 1e-12.
+QUANT_GRID = 1e12
+
+
+def quantize_exact(c: Column | str) -> Column:
+    """1e-12 contribution quantizer → exact integer (decimal(38,0)), so a
+    SUM over it is exact and order-independent (the GD trainers' gradient
+    sums, the PCA power iteration). Pure binary double arithmetic; |c|
+    must stay ≤ ~1e6 so the scaled value fits double-exact integer range
+    (2^53)."""
+    c = _col(c)
+    return (
+        F.signum(c) * F.floor(F.abs(c) * F.lit(QUANT_GRID) + F.lit(0.5))
+    ).cast("decimal(38,0)")
+
+
 def numeric_coerce(c: Column | str) -> Column:
     """Lossy string→double coercion (E11): NULL on unparseable, exactly
     pandas ``to_numeric(errors='coerce')`` (requires non-ANSI cast mode,

@@ -164,7 +164,7 @@ def power_iteration_top_pc(
     """
     import math
 
-    from icnarc_to_philips_linkage_spark.operators.regression import _qint
+    from icnarc_to_philips_linkage_spark.functions.expressions import quantize_exact
 
     # Persisted at the training width (scale.width): the loop re-scans
     # this frame every iteration.
@@ -207,7 +207,7 @@ def power_iteration_top_pc(
                 .agg(
                     F.count(F.lit(1)).alias("n"),
                     F.sum(
-                        _qint(
+                        quantize_exact(
                             F.col("__y") * F.col("__xj").cast("double")
                         )
                     ).alias("z"),

@@ -32,18 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icnarc_to_philips_linkage_spark.functions.expressions import (
+    QUANT_GRID,
+    quantize_exact,
+)
 from icnarc_to_philips_linkage_spark.operators.scale import width
-
-GRID = 1e12
-
-
-def _qint(col):
-    """1e-12 contribution quantizer → exact integer (decimal(38,0)).
-    Pure binary double arithmetic; |col| must stay ≤ ~1e6 so the
-    scaled value fits double-exact integer range (2^53)."""
-    return (
-        F.signum(col) * F.floor(F.abs(col) * F.lit(GRID) + F.lit(0.5))
-    ).cast("decimal(38,0)")
 
 
 def fast_sigmoid(z):
@@ -119,7 +112,7 @@ def gd_train_trajectory(
     try:
         k = len(feature_cols) + 1
         # quantizer-exactness guard: |x_j|·1e12 must stay < 2^53
-        max_abs_x = 2.0**53 / GRID  # ≈ 9007.2
+        max_abs_x = 2.0**53 / QUANT_GRID  # ≈ 9007.2
         xmax_row = feats.agg(
             *[
                 F.max(F.abs(F.col(f"__x{j}"))).alias(f"m{j}")
@@ -146,7 +139,7 @@ def gd_train_trajectory(
             row = feats.agg(
                 F.count(F.lit(1)).alias("n"),
                 *[
-                    F.sum(_qint(resid * F.col(f"__x{j}"))).alias(f"s{j}")
+                    F.sum(quantize_exact(resid * F.col(f"__x{j}"))).alias(f"s{j}")
                     for j in range(k)
                 ],
             ).collect()[0]
@@ -154,7 +147,7 @@ def gd_train_trajectory(
             if n == 0:
                 break
             w = [
-                w[j] - lr * (float(row[f"s{j}"]) / GRID) / n
+                w[j] - lr * (float(row[f"s{j}"]) / QUANT_GRID) / n
                 for j in range(k)
             ]
             traj.append(list(w))
@@ -207,7 +200,7 @@ def quantile_gd_train_trajectory(
     )
     try:
         k = len(feature_cols) + 1
-        max_abs_x = 2.0**53 / GRID
+        max_abs_x = 2.0**53 / QUANT_GRID
         # intercept-only fits (k = 1) have no feature to guard
         xmax_row = (
             feats.agg(
@@ -238,7 +231,7 @@ def quantile_gd_train_trajectory(
             row = feats.agg(
                 F.count(F.lit(1)).alias("n"),
                 *[
-                    F.sum(_qint(resid * F.col(f"__x{j}"))).alias(f"s{j}")
+                    F.sum(quantize_exact(resid * F.col(f"__x{j}"))).alias(f"s{j}")
                     for j in range(k)
                 ],
             ).collect()[0]
@@ -246,7 +239,7 @@ def quantile_gd_train_trajectory(
             if n == 0:
                 break
             w = [
-                w[j] - lr * (float(row[f"s{j}"]) / GRID) / n
+                w[j] - lr * (float(row[f"s{j}"]) / QUANT_GRID) / n
                 for j in range(k)
             ]
             traj.append(list(w))
@@ -262,7 +255,7 @@ def pinball_loss_expr(
 ):
     """Per-row pinball loss ρ_τ(y − z) as a Column, with the SAME
     left-associated z and exact indicator as training — feed through
-    ``_qint`` + sum for the engine-exact mean loss."""
+    ``quantize_exact`` + sum for the engine-exact mean loss."""
     z = F.lit(weights[0])
     for j, c in enumerate(feature_cols):
         z = z + F.lit(weights[j + 1]) * F.col(c).cast("double")

@@ -1,8 +1,24 @@
 """End-to-end pipeline entry points (SURVEY.md §3 EP1/EP2/EP3) — the
-user-facing API a reference user switches to. Each pipeline is ONE lazy
-DataFrame DAG: Catalyst sees the whole chain (the reference materialized
-eagerly between every step); the only materialization points are the
-sinks/reports the caller asks for.
+user-facing API a reference user switches to. Each pipeline is a lazy
+DataFrame DAG whose stage outputs with more than one consumer are
+persisted: one curation run asks for several sinks and reports, and
+without the persists every action replays EP1, the XML parse and the
+chartevents scan from the raw files. The persists are:
+
+- EP1: ``icnarc_clean``, ``philips_merged`` and ``linked`` (read by the
+  icustays, philips_merged and cohort sinks, EP3's cohort keys and the
+  validation and cohort reports);
+- EP2: the raw ``map<code,text>`` frame, which the build-time presence
+  scan fills, so neither the sink nor the report parses the XML again;
+- EP3: the decorated events (the chartevents sink and the frequency
+  report).
+
+Between the persists Catalyst still sees the whole chain. The first
+action fills a cache and later actions read it. The returned frames
+read the caches, so whoever runs the actions releases them with
+``spark.catalog.clearCache()`` (the lifecycle in ``plans/tables.py``);
+a cached file scan is matched by its path, so a rewritten input is
+only seen again after that release.
 
 Reference drivers re-expressed:
 - EP1 linkage  <- clean_encounterids.py:293-303 + notebook cells 6-16
@@ -34,16 +50,17 @@ def run_linkage_pipeline(
     strict_parity: bool = False,
 ) -> dict[str, DataFrame]:
     """EP1: clean both sides → merge Philips stay fragments → link →
-    merge multi-episode stays. Returns every intermediate (all lazy)
-    plus the validation report, keyed like the reference's variables."""
+    merge multi-episode stays. Returns every intermediate plus the
+    validation report, keyed like the reference's variables; the three
+    shared intermediates are persisted (module docstring)."""
     icnarc_clean = clean.clean_icnarc_cis_ids(
         icnarc_ids, ww_errors, strict_parity=strict_parity
-    )
+    ).persist()
     philips_clean = clean.clean_philips_encounterids(philips, enc_errors)
     philips_merged = dedup.combine_non_unique_philips_encounters(
         philips_clean, mode=dedup_mode
-    )
-    linked = link.join_icnarc_to_philips(icnarc_clean, philips_merged)
+    ).persist()
+    linked = link.join_icnarc_to_philips(icnarc_clean, philips_merged).persist()
     icustays = dedup.combine_non_unique_encounters(linked, mode=dedup_mode)
     return {
         "icnarc_clean": icnarc_clean,
@@ -63,10 +80,16 @@ def run_icnarc_ingest(
     datetime_pairs: Sequence[str] = derive.DATETIME_PAIRS,
 ) -> DataFrame:
     """EP2: XML → wide CMP table → unit decode → datetime combine →
-    derived outcomes (out-time, mortality, age/LOS/BMI/sex)."""
-    from icnarc_to_philips_linkage_spark.sources.xml import parse_icnarc_xml
+    derived outcomes (out-time, mortality, age/LOS/BMI/sex). The parsed
+    records are persisted before the presence scan, which fills the
+    cache before this returns."""
+    from icnarc_to_philips_linkage_spark.sources.xml import (
+        read_icnarc_xml_raw,
+        widen_by_cmp,
+    )
 
-    wide = parse_icnarc_xml(spark, xml_path, cmp_properties)
+    raw = read_icnarc_xml_raw(spark, xml_path).persist()
+    wide = widen_by_cmp(raw, cmp_properties)
     wide = derive.convert_unit_numbers(wide)
     wide = derive.combine_date_time_columns(wide, datetime_pairs)
     wide = derive.derive_icnarc_outtime(wide)
@@ -84,7 +107,8 @@ def run_chartevents_pipeline(
 ) -> DataFrame:
     """EP3: union the two EAV extracts → cohort restriction → typed-value
     resolution → harmonised-variable decoration. Returns the decorated
-    long table ready for the profile/report operators."""
+    long table, persisted, ready for the sinks and the profile/report
+    operators."""
     events = assessments.unionByName(labs, allowMissingColumns=True)
     events = link.cohort_restrict(events, cohort, mode=cohort_mode)
     events = events.withColumn(
@@ -93,4 +117,4 @@ def run_chartevents_pipeline(
             "attributeId", list(string_valued_ids), "valueString", "valueNumber"
         ),
     )
-    return link.decorate_events(events, interventions)
+    return link.decorate_events(events, interventions).persist()

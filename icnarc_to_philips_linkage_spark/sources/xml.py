@@ -16,6 +16,10 @@ Spark-first design, self-contained (no spark-xml dependency):
   *schema work*, not data work: the CMP dimension drives a
   select-with-aliases, and code-presence pruning
   (parse_ICNARC_xml.py:47-49) is a map_keys aggregation, not a rescan.
+- The EP2 pipeline (``pipelines.run_icnarc_ingest``) persists the raw
+  map frame before the presence scan, so the scan fills the cache that
+  the sink and the reports then read: one curation run parses the XML
+  once. ``parse_icnarc_xml`` on its own stays lazy and persists nothing.
 """
 
 from __future__ import annotations

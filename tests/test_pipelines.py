@@ -1,12 +1,17 @@
-"""EP1/EP3 composite pipelines through the public API, reusing the
-golden fixtures (EP2 is covered by test_sources + test_reference_pipeline
-derive tests)."""
+"""EP1/EP2/EP3 composite pipelines through the public API, reusing the
+golden fixtures (EP2's derivations are covered by test_sources +
+test_reference_pipeline derive tests), and the stage persists: each
+stage output with several consumers is cached, and the caller's
+``spark.catalog.clearCache()`` releases it."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from icnarc_to_philips_linkage_spark import pipelines
+from icnarc_to_philips_linkage_spark.sources import readers
 from tests.test_reference_pipeline import (  # noqa: F401 (fixtures)
     chartevents,
     enc_errors,
@@ -17,15 +22,38 @@ from tests.test_reference_pipeline import (  # noqa: F401 (fixtures)
 )
 
 
+@pytest.fixture(autouse=True)
+def release_caches(spark):
+    """The pipelines' returned frames read persisted stages; release
+    them the way every runner does, before and after each test."""
+    spark.catalog.clearCache()
+    yield
+    spark.catalog.clearCache()
+
+
+def reads_cache(df) -> bool:
+    return "InMemoryRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_linkage_pipeline_end_to_end(spark, icnarc, philips, ww_errors, enc_errors):
+    before = persistent_rdd_ids(spark)
     out = pipelines.run_linkage_pipeline(icnarc, philips, ww_errors, enc_errors)
+    # icnarc_clean, philips_merged and linked are persisted: the sinks
+    # and reports of one run read them instead of replaying EP1
+    assert reads_cache(out["icustays"])
+    assert reads_cache(out["validation"])
     assert out["icustays"].count() == 3
     v = out["validation"].collect()[0]
     assert v["linked_rows"] == 4
-    # the whole chain is one lazy DAG: icustays plan contains no
-    # materialization barriers the user didn't ask for
     stays = {r["CIS Patient ID Original"] for r in out["icustays"].collect()}
     assert stays == {101, 9001, 105}
+    assert persistent_rdd_ids(spark) - before, "EP1 cached nothing"
+    spark.catalog.clearCache()
+    assert not persistent_rdd_ids(spark) - before, "clearCache left a stage cache"
 
 
 def test_chartevents_pipeline_end_to_end(
@@ -40,9 +68,92 @@ def test_chartevents_pipeline_end_to_end(
     out = pipelines.run_chartevents_pipeline(
         assessments, labs, cohort, interventions_key
     )
+    assert reads_cache(out)
     rows = out.collect()
     assert {r.encounterId for r in rows} == {101, 102}
     by_var = {r.Variable for r in rows}
     assert by_var == {"Heart Rate", "Airway"}
     airway = [r for r in rows if r.Variable == "Airway"][0]
     assert airway.value == "Intubated"
+
+
+CMP_CODES = [
+    ("ICNARCNO", "ICNARC Number"), ("CMPNO", "ICNARC CMP Number"),
+    ("SEX", "Sex"), ("DOB", "Date of Birth"),
+    ("HT", "Height in cm"), ("WT", "Weight in kg"),
+    ("DAU", "Date of admission to your unit"),
+    ("TAU", "Time of admission to your unit"),
+    ("DDU", "Date of discharge from your unit"),
+    ("TDU", "Time of discharge from your unit"),
+    ("SDU", "Status at discharge from your unit"),
+]
+
+
+def test_icnarc_ingest_fills_xml_cache(spark, tmp_path):
+    """The parsed records are persisted before the presence scan, so
+    the scan inside run_icnarc_ingest fills the cache: the frame it
+    returns reads cached partitions before the caller runs an action."""
+    dim = spark.createDataFrame([Row(CODE=c, Description=d) for c, d in CMP_CODES])
+    body = "".join(
+        f"<patient><ICNARCNO>{n}</ICNARCNO><CMPNO>H91</CMPNO><SEX>F</SEX>"
+        "<DOB>1966-01-01</DOB><HT>170</HT><WT>68</WT>"
+        "<DAU>2016-01-01</DAU><TAU>08:00:00</TAU>"
+        "<DDU>2016-01-05</DDU><TDU>10:00:00</TDU><SDU>A</SDU></patient>"
+        for n in (2015001, 2015002)
+    )
+    p = tmp_path / "export.xml"
+    p.write_text(f'<?xml version="1.0"?>\n<export>{body}</export>')
+    before = persistent_rdd_ids(spark)
+    sc = spark.sparkContext._jsc.sc()
+
+    out = pipelines.run_icnarc_ingest(spark, str(p), dim)
+
+    assert reads_cache(out)
+    filled = [
+        info for info in sc.getRDDStorageInfo()
+        if info.id() not in before and info.numCachedPartitions() > 0
+    ]
+    assert filled, "the presence scan did not fill the XML cache"
+    assert all(i.numCachedPartitions() == i.numPartitions() for i in filled)
+    assert sorted(r["ICNARC number"] for r in out.collect()) == [2015001, 2015002]
+    spark.catalog.clearCache()
+    assert not persistent_rdd_ids(spark) - before, "clearCache left the XML cache"
+
+
+PHILIPS_SCHEMA = (
+    "encounterId long, ptCensusId long, age int, inTime string, outTime string, "
+    "tNumber string, `lengthOfStay (mins)` double, gender string"
+)
+
+
+def write_philips_rpt(path, rows) -> None:
+    header = "encounterId\tptCensusId\tage\tinTime\toutTime\ttNumber\tlengthOfStay (mins)\tgender"
+    lines = [header, *("\t".join(map(str, r)) for r in rows)]
+    path.write_text("\n".join(lines) + f"\n\n({len(rows)} rows affected)\n")
+
+
+def test_linkage_rereads_rewritten_input_after_release(
+    spark, tmp_path, icnarc, ww_errors, enc_errors
+):
+    """A cached file scan is matched by its path, not by the file's
+    contents: after the input is rewritten in place, EP1 returns the
+    old rows until the caller releases the stage caches with
+    ``clearCache()``; after the release it sees the new rows."""
+    rpt = tmp_path / "encounter_summary.rpt"
+
+    def icustays() -> set[int]:
+        philips = readers.read_tsv_report(
+            spark, str(rpt), "encounterId", schema=PHILIPS_SCHEMA,
+            date_cols=["inTime", "outTime"])
+        out = pipelines.run_linkage_pipeline(icnarc, philips, ww_errors, enc_errors)
+        return {r["CIS Patient ID Original"] for r in out["icustays"].collect()}
+
+    stay_101 = (101, 1, 50, "2016-01-01 10:00:00", "2016-01-05 10:00:00", "T1", 5760.0, "Male")
+    stay_105 = (105, 4, 44, "2016-03-10 12:00:00", "2016-03-12 12:00:00", "T4", 2880.0, "Female")
+    write_philips_rpt(rpt, [stay_101, stay_105])
+    assert icustays() == {101, 105}
+
+    write_philips_rpt(rpt, [stay_101])
+    assert icustays() == {101, 105}, "stale rows: the stage caches match by path"
+    spark.catalog.clearCache()
+    assert icustays() == {101}

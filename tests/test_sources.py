@@ -110,6 +110,7 @@ def test_icnarc_ingest_without_in_unit_death(spark, tmp_path):
     assert rows[2015002]["icnarc_outTime"] == dt.datetime(2016, 2, 3, 20, 30)
     assert all(r["mortality_status"] == "A" for r in rows.values())
     assert rows[2015001]["icnarc_los"] == 4 * 24 * 60 + 2 * 60
+    spark.catalog.clearCache()  # the ingest persists the parsed records
 
 
 RPT = (
