@@ -5,8 +5,8 @@ persisted: one curation run asks for several sinks and reports, and
 without the persists every action replays EP1, the XML parse and the
 chartevents scan from the raw files. The persists are:
 
-- EP1: ``icnarc_clean``, ``philips_merged`` and ``linked`` (read by the
-  icustays, philips_merged and cohort sinks, EP3's cohort keys and the
+- EP1: ``philips_merged`` and ``linked`` (read by the icustays,
+  philips_merged and cohort sinks, EP3's cohort keys and the
   validation and cohort reports);
 - EP2: the raw ``map<code,text>`` frame, which the build-time presence
   scan fills, so neither the sink nor the report parses the XML again;
@@ -16,9 +16,11 @@ chartevents scan from the raw files. The persists are:
 Between the persists Catalyst still sees the whole chain. The first
 action fills a cache and later actions read it. The returned frames
 read the caches, so whoever runs the actions releases them with
-``spark.catalog.clearCache()`` (the lifecycle in ``plans/tables.py``);
-a cached file scan is matched by its path, so a rewritten input is
-only seen again after that release.
+``spark.catalog.clearCache()`` (the lifecycle in ``plans/tables.py``).
+Each call owns its caches: Spark matches a cached file scan by its
+path, not by the file's contents, so a call first drops any cache an
+earlier call left on the same plan, and a rewritten input is read
+afresh (``_persist_fresh``).
 
 Reference drivers re-expressed:
 - EP1 linkage  <- clean_encounterids.py:293-303 + notebook cells 6-16
@@ -41,6 +43,14 @@ STRING_VALUED_ATTRIBUTE_IDS = (
 )
 
 
+def _persist_fresh(df: DataFrame) -> DataFrame:
+    """Persist ``df`` as this call's own cache. ``unpersist`` first drops
+    an entry an earlier call cached for the same plan, which the cache
+    manager would otherwise reuse even if the files under it changed."""
+    df.unpersist()
+    return df.persist()
+
+
 def run_linkage_pipeline(
     icnarc_ids: DataFrame,
     philips: DataFrame,
@@ -51,16 +61,16 @@ def run_linkage_pipeline(
 ) -> dict[str, DataFrame]:
     """EP1: clean both sides → merge Philips stay fragments → link →
     merge multi-episode stays. Returns every intermediate plus the
-    validation report, keyed like the reference's variables; the three
+    validation report, keyed like the reference's variables; the two
     shared intermediates are persisted (module docstring)."""
     icnarc_clean = clean.clean_icnarc_cis_ids(
         icnarc_ids, ww_errors, strict_parity=strict_parity
-    ).persist()
+    )
     philips_clean = clean.clean_philips_encounterids(philips, enc_errors)
-    philips_merged = dedup.combine_non_unique_philips_encounters(
+    philips_merged = _persist_fresh(dedup.combine_non_unique_philips_encounters(
         philips_clean, mode=dedup_mode
-    ).persist()
-    linked = link.join_icnarc_to_philips(icnarc_clean, philips_merged).persist()
+    ))
+    linked = _persist_fresh(link.join_icnarc_to_philips(icnarc_clean, philips_merged))
     icustays = dedup.combine_non_unique_encounters(linked, mode=dedup_mode)
     return {
         "icnarc_clean": icnarc_clean,
@@ -80,16 +90,11 @@ def run_icnarc_ingest(
     datetime_pairs: Sequence[str] = derive.DATETIME_PAIRS,
 ) -> DataFrame:
     """EP2: XML → wide CMP table → unit decode → datetime combine →
-    derived outcomes (out-time, mortality, age/LOS/BMI/sex). The parsed
-    records are persisted before the presence scan, which fills the
-    cache before this returns."""
-    from icnarc_to_philips_linkage_spark.sources.xml import (
-        read_icnarc_xml_raw,
-        widen_by_cmp,
-    )
+    derived outcomes (out-time, mortality, age/LOS/BMI/sex). The parse
+    persists the XML records and fills that cache before this returns."""
+    from icnarc_to_philips_linkage_spark.sources.xml import parse_icnarc_xml
 
-    raw = read_icnarc_xml_raw(spark, xml_path).persist()
-    wide = widen_by_cmp(raw, cmp_properties)
+    wide = parse_icnarc_xml(spark, xml_path, cmp_properties)
     wide = derive.convert_unit_numbers(wide)
     wide = derive.combine_date_time_columns(wide, datetime_pairs)
     wide = derive.derive_icnarc_outtime(wide)
@@ -117,4 +122,4 @@ def run_chartevents_pipeline(
             "attributeId", list(string_valued_ids), "valueString", "valueNumber"
         ),
     )
-    return link.decorate_events(events, interventions).persist()
+    return _persist_fresh(link.decorate_events(events, interventions))

@@ -104,10 +104,11 @@ def clear_trained(spark: SparkSession) -> None:
 # runs the action, with ``spark.catalog.clearCache()``: bench.py, the
 # tools/ sweeps and the plan-fingerprint test do so after every query.
 # The curation pipelines (``pipelines.py``) persist their shared stage
-# outputs the same way (EP1's icnarc_clean, philips_merged and linked,
-# EP2's parsed XML records, EP3's decorated events); the caller releases
-# them after the run's last sink or report, and must do so before
-# re-running on inputs rewritten at the same path.
+# outputs the same way (EP1's philips_merged and linked, EP2's parsed
+# XML records, EP3's decorated events); the caller releases
+# them after the run's last sink or report. A pipeline call replaces the
+# caches an earlier call left on the same input paths, so a rewritten
+# input is read afresh.
 # A persist used up inside the function is unpersisted there before it
 # returns (regression's GD and quantile-GD trainers, the PCA power
 # iteration, PQ training, connected_components' edges). Spark's storage lists

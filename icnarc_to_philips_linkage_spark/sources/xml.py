@@ -16,10 +16,9 @@ Spark-first design, self-contained (no spark-xml dependency):
   *schema work*, not data work: the CMP dimension drives a
   select-with-aliases, and code-presence pruning
   (parse_ICNARC_xml.py:47-49) is a map_keys aggregation, not a rescan.
-- The EP2 pipeline (``pipelines.run_icnarc_ingest``) persists the raw
-  map frame before the presence scan, so the scan fills the cache that
-  the sink and the reports then read: one curation run parses the XML
-  once. ``parse_icnarc_xml`` on its own stays lazy and persists nothing.
+- ``parse_icnarc_xml`` persists the raw map frame before the presence
+  scan, so the scan fills the cache that the EP2 sink and reports then
+  read: one curation run parses the XML once.
 """
 
 from __future__ import annotations
@@ -112,6 +111,9 @@ def parse_icnarc_xml(
     spark: SparkSession, path: str, cmp_properties: DataFrame
 ) -> DataFrame:
     """End-to-end S1+S2: XML → wide string-typed CMP DataFrame (the
-    reference's ``parse_icnarc_xml``, parse_ICNARC_xml.py:22-64)."""
-    raw = read_icnarc_xml_raw(spark, path)
+    reference's ``parse_icnarc_xml``, parse_ICNARC_xml.py:22-64). The
+    returned frame reads the persisted records; the caller releases
+    them with ``spark.catalog.clearCache()``. Each call's records wrap a
+    new RDD, so no earlier call's cache can match them."""
+    raw = read_icnarc_xml_raw(spark, path).persist()
     return widen_by_cmp(raw, cmp_properties)

@@ -42,8 +42,8 @@ def persistent_rdd_ids(spark) -> set[int]:
 def test_linkage_pipeline_end_to_end(spark, icnarc, philips, ww_errors, enc_errors):
     before = persistent_rdd_ids(spark)
     out = pipelines.run_linkage_pipeline(icnarc, philips, ww_errors, enc_errors)
-    # icnarc_clean, philips_merged and linked are persisted: the sinks
-    # and reports of one run read them instead of replaying EP1
+    # philips_merged and linked are persisted: the sinks and reports
+    # of one run read them instead of replaying EP1
     assert reads_cache(out["icustays"])
     assert reads_cache(out["validation"])
     assert out["icustays"].count() == 3
@@ -132,14 +132,16 @@ def write_philips_rpt(path, rows) -> None:
     path.write_text("\n".join(lines) + f"\n\n({len(rows)} rows affected)\n")
 
 
-def test_linkage_rereads_rewritten_input_after_release(
+def test_linkage_rereads_rewritten_input(
     spark, tmp_path, icnarc, ww_errors, enc_errors
 ):
-    """A cached file scan is matched by its path, not by the file's
-    contents: after the input is rewritten in place, EP1 returns the
-    old rows until the caller releases the stage caches with
-    ``clearCache()``; after the release it sees the new rows."""
+    """Spark matches a cached file scan by its path, not by the file's
+    contents. Each EP1 call drops the stage caches an earlier call left
+    on the same path, so an input rewritten in place is read afresh and
+    the replaced caches do not pile up; ``clearCache()`` releases the
+    rest, and the next call still reads the file as it is."""
     rpt = tmp_path / "encounter_summary.rpt"
+    before = persistent_rdd_ids(spark)
 
     def icustays() -> set[int]:
         philips = readers.read_tsv_report(
@@ -152,8 +154,12 @@ def test_linkage_rereads_rewritten_input_after_release(
     stay_105 = (105, 4, 44, "2016-03-10 12:00:00", "2016-03-12 12:00:00", "T4", 2880.0, "Female")
     write_philips_rpt(rpt, [stay_101, stay_105])
     assert icustays() == {101, 105}
+    cached = persistent_rdd_ids(spark) - before
+    assert cached, "EP1 cached nothing"
 
     write_philips_rpt(rpt, [stay_101])
-    assert icustays() == {101, 105}, "stale rows: the stage caches match by path"
+    assert icustays() == {101}, "stale rows from an earlier call's cache"
+    assert len(persistent_rdd_ids(spark) - before) == len(cached)
     spark.catalog.clearCache()
+    assert not persistent_rdd_ids(spark) - before, "clearCache left a stage cache"
     assert icustays() == {101}

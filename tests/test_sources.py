@@ -61,6 +61,7 @@ def test_xml_ingest_namespace_strip_and_pivot(spark, xml_path, cmp_properties):
     assert rows["2015002"]["Height in cm"] is None, "missing tag → NULL"
     # everything string-typed (reference's string-first model)
     assert all(t == "string" for _, t in wide.dtypes)
+    spark.catalog.clearCache()  # the parse persists the XML records
 
 
 
@@ -286,6 +287,7 @@ def test_xml_ingest_end_to_end_oracle(spark, tmp_path, cmp_properties):
     wide = xml.parse_icnarc_xml(spark, str(p), cmp_properties)
     sink = str(tmp_path / "wide_parquet")
     wide.write.mode("overwrite").parquet(sink)
+    spark.catalog.clearCache()  # the parse persists the XML records
 
     desc = {
         "ICNARCNO": "ICNARC Number",
