@@ -8,8 +8,9 @@ chartevents scan from the raw files. The persists are:
 - EP1: ``philips_merged`` and ``linked`` (read by the icustays,
   philips_merged and cohort sinks, EP3's cohort keys and the
   validation and cohort reports);
-- EP2: the raw ``map<code,text>`` frame, which the build-time presence
-  scan fills, so neither the sink nor the report parses the XML again;
+- EP2: the patient records, read by Spark's XML source and folded to
+  one ``map<code,text>`` column; the build-time presence scan fills the
+  cache, so neither the sink nor the report reads the XML again;
 - EP3: the decorated events (the chartevents sink and the frequency
   report).
 
@@ -20,7 +21,7 @@ read the caches, so whoever runs the actions releases them with
 Each call owns its caches: Spark matches a cached file scan by its
 path, not by the file's contents, so a call first drops any cache an
 earlier call left on the same plan, and a rewritten input is read
-afresh (``_persist_fresh``).
+afresh (``persist_fresh``).
 
 Reference drivers re-expressed:
 - EP1 linkage  <- clean_encounterids.py:293-303 + notebook cells 6-16
@@ -36,19 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from icnarc_to_philips_linkage_spark.functions.expressions import typed_value
 from icnarc_to_philips_linkage_spark.operators import clean, dedup, derive, link
+from icnarc_to_philips_linkage_spark.plans.tables import persist_fresh
 
 # cell 51 (.ipynb:808): attributeIds whose value lives in valueString
 STRING_VALUED_ATTRIBUTE_IDS = (
     16240, 6847, 6849, 6851, 8590, 34870, 34873, 8584, 3566, 25545,
 )
-
-
-def _persist_fresh(df: DataFrame) -> DataFrame:
-    """Persist ``df`` as this call's own cache. ``unpersist`` first drops
-    an entry an earlier call cached for the same plan, which the cache
-    manager would otherwise reuse even if the files under it changed."""
-    df.unpersist()
-    return df.persist()
 
 
 def run_linkage_pipeline(
@@ -67,10 +61,10 @@ def run_linkage_pipeline(
         icnarc_ids, ww_errors, strict_parity=strict_parity
     )
     philips_clean = clean.clean_philips_encounterids(philips, enc_errors)
-    philips_merged = _persist_fresh(dedup.combine_non_unique_philips_encounters(
+    philips_merged = persist_fresh(dedup.combine_non_unique_philips_encounters(
         philips_clean, mode=dedup_mode
     ))
-    linked = _persist_fresh(link.join_icnarc_to_philips(icnarc_clean, philips_merged))
+    linked = persist_fresh(link.join_icnarc_to_philips(icnarc_clean, philips_merged))
     icustays = dedup.combine_non_unique_encounters(linked, mode=dedup_mode)
     return {
         "icnarc_clean": icnarc_clean,
@@ -122,4 +116,4 @@ def run_chartevents_pipeline(
             "attributeId", list(string_valued_ids), "valueString", "valueNumber"
         ),
     )
-    return _persist_fresh(link.decorate_events(events, interventions))
+    return persist_fresh(link.decorate_events(events, interventions))

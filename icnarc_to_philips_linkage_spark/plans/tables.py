@@ -108,11 +108,19 @@ def clear_trained(spark: SparkSession) -> None:
 # XML records, EP3's decorated events); the caller releases
 # them after the run's last sink or report. A pipeline call replaces the
 # caches an earlier call left on the same input paths, so a rewritten
-# input is read afresh.
+# input is read afresh (``persist_fresh``).
 # A persist used up inside the function is unpersisted there before it
 # returns (regression's GD and quantile-GD trainers, the PCA power
 # iteration, PQ training, connected_components' edges). Spark's storage lists
 # every live cache: ``spark.sparkContext._jsc.sc().getPersistentRDDs()``.
+
+
+def persist_fresh(df: DataFrame) -> DataFrame:
+    """Persist ``df`` as this call's own cache. ``unpersist`` first drops
+    an entry an earlier call cached for the same plan, which the cache
+    manager would otherwise reuse even if the files under it changed."""
+    df.unpersist()
+    return df.persist()
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

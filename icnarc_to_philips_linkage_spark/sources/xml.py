@@ -5,68 +5,55 @@ The reference parses the whole export with ElementTree on one machine
 {tag → text} with XML namespaces stripped, then widen to one column per
 CMP code present, named by the CMP dimension's Description.
 
-Spark-first design, self-contained (no spark-xml dependency):
+Spark-first design:
 
-- Files parallelize at file granularity: one ICNARC export per task via
-  ``wholeTextFiles`` (gzip'd XML isn't splittable anyway; a yearly
-  export is tens of MB — the reference ships 4 years in one file). For
-  100 TB of XML you have many files, which is exactly the parallelism
-  unit used here.
-- Parse emits a ``MapType`` column (code → text); the wide projection is
-  *schema work*, not data work: the CMP dimension drives a
-  select-with-aliases, and code-presence pruning
+- S1 is Spark's built-in XML source with ``rowTag`` = patient: prefixed
+  and default namespaces are ignored, uncompressed exports split by row
+  tag, and the schema (the CMP dimension's codes, all strings) is given,
+  so reading plans no inference pass. Text is kept as written
+  (``ignoreSurroundingSpaces`` off); a malformed export fails the read
+  (``FAILFAST``) rather than folding valid patients into a corrupt row.
+- The per-code columns fold into one ``MapType`` column (code → text)
+  holding only the non-blank values, as the reference keeps only
+  children with text; a patient with none gives no row.
+- The wide projection is *schema work*, not data work: the CMP
+  dimension drives a select-with-aliases, and code-presence pruning
   (parse_ICNARC_xml.py:47-49) is a map_keys aggregation, not a rescan.
-- ``parse_icnarc_xml`` persists the raw map frame before the presence
+- ``parse_icnarc_xml`` persists the map frame before the presence
   scan, so the scan fills the cache that the EP2 sink and reports then
   read: one curation run parses the XML once.
 """
 
 from __future__ import annotations
 
-import xml.etree.ElementTree as ET
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import MapType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-RAW_SCHEMA = StructType(
-    [StructField("cmp", MapType(StringType(), StringType()), False)]
-)
+from icnarc_to_philips_linkage_spark.plans.tables import persist_fresh
 
-
-def _strip_ns(tag: str) -> str:
-    """'{namespace}CODE' → 'CODE' (parse_ICNARC_xml.py:35)."""
-    return tag.split("}")[-1]
-
-
-def parse_patients(xml_text: str, row_tag: str = "patient") -> list[dict]:
-    """One {code → text} dict per <patient> element. Runs inside
-    executors via mapPartitions — ElementTree only, stdlib."""
-    root = ET.fromstring(xml_text)
-    out = []
-    for elem in root.iter():
-        if _strip_ns(elem.tag) != row_tag:
-            continue
-        rec = {
-            _strip_ns(child.tag): child.text
-            for child in elem
-            if child.text is not None and child.text.strip() != ""
-        }
-        if rec:
-            out.append(rec)
-    return out
+XML_OPTIONS = {
+    "rowTag": "patient",
+    "ignoreNamespace": "true",
+    "ignoreSurroundingSpaces": "false",
+    "mode": "FAILFAST",
+}
 
 
 def read_icnarc_xml_raw(
-    spark: SparkSession, path: str, row_tag: str = "patient"
+    spark: SparkSession, path: str, codes: list[str]
 ) -> DataFrame:
     """S1: distributed XML scan → one row per patient with a
-    ``cmp: map<string,string>`` column."""
-    files = spark.sparkContext.wholeTextFiles(path)
-    rows = files.flatMap(
-        lambda kv: [(rec,) for rec in parse_patients(kv[1], row_tag)]
+    ``cmp: map<string,string>`` column of its non-blank ``codes``."""
+    schema = StructType([StructField(c, StringType()) for c in codes])
+    scan = spark.read.format("xml").options(**XML_OPTIONS).schema(schema).load(path)
+    cmp = F.map_filter(
+        F.map_from_arrays(
+            F.array(*map(F.lit, codes)), F.array(*(F.col(f"`{c}`") for c in codes))
+        ),
+        lambda _, v: v.isNotNull() & ~v.rlike(r"^\s*$"),
     )
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    return scan.select(cmp.alias("cmp")).filter(F.size("cmp") > 0)
 
 
 def present_codes(raw: DataFrame) -> list[str]:
@@ -83,20 +70,12 @@ def present_codes(raw: DataFrame) -> list[str]:
     ]
 
 
-def widen_by_cmp(
-    raw: DataFrame, cmp_properties: DataFrame, codes: list[str] | None = None
-) -> DataFrame:
+def widen_by_cmp(raw: DataFrame, mapping: list[tuple[str, str]]) -> DataFrame:
     """S2: wide-table construction — one column per present CMP code,
-    named by the dimension's Description (parse_ICNARC_xml.py:45-62).
-    The CMP dimension is tiny (hundreds of rows) and is collected to
-    drive column aliasing; absent codes are pruned (schema work only)."""
-    mapping = [
-        (r["CODE"], r["Description"])
-        for r in cmp_properties.select("CODE", "Description").collect()
-    ]
-    if codes is None:
-        codes = present_codes(raw)
-    present = set(codes)
+    named by its Description in the collected CMP dimension ``mapping``
+    of (CODE, Description) pairs (parse_ICNARC_xml.py:45-62). Absent
+    codes are pruned (schema work only)."""
+    present = set(present_codes(raw))
     cols = [
         F.col("cmp")[code].alias(desc)
         for code, desc in mapping
@@ -112,8 +91,15 @@ def parse_icnarc_xml(
 ) -> DataFrame:
     """End-to-end S1+S2: XML → wide string-typed CMP DataFrame (the
     reference's ``parse_icnarc_xml``, parse_ICNARC_xml.py:22-64). The
-    returned frame reads the persisted records; the caller releases
-    them with ``spark.catalog.clearCache()``. Each call's records wrap a
-    new RDD, so no earlier call's cache can match them."""
-    raw = read_icnarc_xml_raw(spark, path).persist()
-    return widen_by_cmp(raw, cmp_properties)
+    CMP dimension is tiny (hundreds of rows) and is collected once: its
+    codes are the read schema and its descriptions the column names.
+    The returned frame reads the persisted records; the caller releases
+    them with ``spark.catalog.clearCache()``. ``persist_fresh`` drops a
+    cache an earlier call left on the same path, so an export rewritten
+    in place is read afresh."""
+    mapping = [
+        (r["CODE"], r["Description"])
+        for r in cmp_properties.select("CODE", "Description").collect()
+    ]
+    raw = persist_fresh(read_icnarc_xml_raw(spark, path, [c for c, _ in mapping]))
+    return widen_by_cmp(raw, mapping)

@@ -89,20 +89,24 @@ CMP_CODES = [
 ]
 
 
-def test_icnarc_ingest_fills_xml_cache(spark, tmp_path):
-    """The parsed records are persisted before the presence scan, so
-    the scan inside run_icnarc_ingest fills the cache: the frame it
-    returns reads cached partitions before the caller runs an action."""
-    dim = spark.createDataFrame([Row(CODE=c, Description=d) for c, d in CMP_CODES])
+def write_export(path, icnarc_numbers) -> None:
     body = "".join(
         f"<patient><ICNARCNO>{n}</ICNARCNO><CMPNO>H91</CMPNO><SEX>F</SEX>"
         "<DOB>1966-01-01</DOB><HT>170</HT><WT>68</WT>"
         "<DAU>2016-01-01</DAU><TAU>08:00:00</TAU>"
         "<DDU>2016-01-05</DDU><TDU>10:00:00</TDU><SDU>A</SDU></patient>"
-        for n in (2015001, 2015002)
+        for n in icnarc_numbers
     )
+    path.write_text(f'<?xml version="1.0"?>\n<export>{body}</export>')
+
+
+def test_icnarc_ingest_fills_xml_cache(spark, tmp_path):
+    """The parsed records are persisted before the presence scan, so
+    the scan inside run_icnarc_ingest fills the cache: the frame it
+    returns reads cached partitions before the caller runs an action."""
+    dim = spark.createDataFrame([Row(CODE=c, Description=d) for c, d in CMP_CODES])
     p = tmp_path / "export.xml"
-    p.write_text(f'<?xml version="1.0"?>\n<export>{body}</export>')
+    write_export(p, [2015001, 2015002])
     before = persistent_rdd_ids(spark)
     sc = spark.sparkContext._jsc.sc()
 
@@ -118,6 +122,41 @@ def test_icnarc_ingest_fills_xml_cache(spark, tmp_path):
     assert sorted(r["ICNARC number"] for r in out.collect()) == [2015001, 2015002]
     spark.catalog.clearCache()
     assert not persistent_rdd_ids(spark) - before, "clearCache left the XML cache"
+
+
+def test_icnarc_ingest_rereads_rewritten_export(spark, tmp_path):
+    """The XML records are a cached file scan, matched by path: an
+    export rewritten in place is read afresh by the next EP2 call, and
+    the replaced cache does not pile up."""
+    dim = spark.createDataFrame([Row(CODE=c, Description=d) for c, d in CMP_CODES])
+    p = tmp_path / "export.xml"
+    before = persistent_rdd_ids(spark)
+
+    def icnarc_numbers() -> list[int]:
+        out = pipelines.run_icnarc_ingest(spark, str(p), dim)
+        return sorted(r["ICNARC number"] for r in out.collect())
+
+    write_export(p, [2015001, 2015002])
+    assert icnarc_numbers() == [2015001, 2015002]
+    cached = persistent_rdd_ids(spark) - before
+    assert cached, "EP2 cached nothing"
+
+    write_export(p, [2015003])
+    assert icnarc_numbers() == [2015003], "stale rows from an earlier call's cache"
+    assert len(persistent_rdd_ids(spark) - before) == len(cached)
+    spark.catalog.clearCache()
+    assert not persistent_rdd_ids(spark) - before, "clearCache left the XML cache"
+
+
+def test_icnarc_ingest_fails_on_malformed_export(spark, tmp_path):
+    """A mismatched tag fails the ingest instead of dropping or folding
+    patients into a corrupt record."""
+    dim = spark.createDataFrame([Row(CODE=c, Description=d) for c, d in CMP_CODES])
+    p = tmp_path / "export.xml"
+    write_export(p, [2015001, 2015002, 2015003])
+    p.write_text(p.read_text().replace("<CMPNO>H91</CMPNO>", "<CMPNO>H91</SEX>", 1))
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        pipelines.run_icnarc_ingest(spark, str(p), dim)
 
 
 PHILIPS_SCHEMA = (

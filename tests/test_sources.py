@@ -13,7 +13,7 @@ ICNARC_XML = """<?xml version="1.0"?>
 <export xmlns="http://icnarc.example/ns">
   <patient>
     <ICNARCNO>2015001</ICNARCNO>
-    <CMPNO>H91</CMPNO>
+    <CMPNO> H91 </CMPNO>
     <SEX>F</SEX>
     <HT>170</HT>
     <WT>68</WT>
@@ -24,6 +24,15 @@ ICNARC_XML = """<?xml version="1.0"?>
     <SEX>M</SEX>
     <WT>80</WT>
     <UNUSEDTAG> </UNUSEDTAG>
+  </patient>
+  <patient>
+    <ICNARCNO>2015003</ICNARCNO>
+    <SEX>
+</SEX>
+  </patient>
+  <patient/>
+  <patient>
+    <NOTINDIM>x</NOTINDIM>
   </patient>
 </export>
 """
@@ -45,6 +54,7 @@ def cmp_properties(spark):
         Row(CODE="HT", Description="Height in cm"),
         Row(CODE="WT", Description="Weight in kg"),
         Row(CODE="NOTINDATA", Description="Absent Column"),  # pruned path
+        Row(CODE="UNUSEDTAG", Description="Blank Only"),  # blank → pruned
     ]
     return spark.createDataFrame(rows)
 
@@ -55,10 +65,14 @@ def test_xml_ingest_namespace_strip_and_pivot(spark, xml_path, cmp_properties):
     assert set(wide.columns) == {
         "ICNARC Number", "ICNARC CMP Number", "Sex", "Height in cm", "Weight in kg"
     }
+    # no row for an empty <patient/> nor for one with no dimension code
     rows = {r["ICNARC Number"]: r for r in wide.collect()}
+    assert set(rows) == {"2015001", "2015002", "2015003"}
     assert rows["2015001"]["Sex"] == "F"
+    assert rows["2015001"]["ICNARC CMP Number"] == " H91 ", "text kept as written"
     assert rows["2015001"]["Height in cm"] == "170"
     assert rows["2015002"]["Height in cm"] is None, "missing tag → NULL"
+    assert rows["2015003"]["Sex"] is None, "newline-only text → NULL"
     # everything string-typed (reference's string-first model)
     assert all(t == "string" for _, t in wide.dtypes)
     spark.catalog.clearCache()  # the parse persists the XML records
@@ -241,12 +255,15 @@ def test_zorder_layout_tightens_both_column_envelopes(spark, tmp_path):
     assert max(zx, zy) < sy / 1.4
 
 
-def _gen_wardwatcher_xml(n: int) -> tuple[str, list[dict]]:
+def _gen_wardwatcher_xml(n: int, prefix: str = "") -> tuple[str, list[dict]]:
     """Deterministic WardWatcher-shaped export with ``n`` <patient>
     records + the expected {code: text} dicts (the independent oracle —
     computed by the generator, not by the parser under test).
     Missing/blank tags are injected on arithmetic patterns so the
-    NULL-handling paths are exercised at volume."""
+    NULL-handling paths are exercised at volume. With ``prefix`` every
+    element carries that namespace prefix instead of the default
+    namespace."""
+    p = f"{prefix}:" if prefix else ""
     units = ["H91", "B16", "K02", "Z44"]
     recs, parts = [], []
     for i in range(n):
@@ -259,16 +276,17 @@ def _gen_wardwatcher_xml(n: int) -> tuple[str, list[dict]]:
             rec["HT"] = str(150 + i % 40)
         if i % 7 != 0:  # WT missing for every seventh
             rec["WT"] = str(45 + i % 60)
-        body = "".join(f"<{k}>{v}</{k}>" for k, v in rec.items())
+        body = "".join(f"<{p}{k}>{v}</{p}{k}>" for k, v in rec.items())
         if i % 5 == 0:  # blank-text tag: must be dropped by the parser
-            body += "<SPARE> </SPARE>"
-        parts.append(f"<patient>{body}</patient>")
+            body += f"<{p}SPARE> </{p}SPARE>"
+        parts.append(f"<{p}patient>{body}</{p}patient>")
         recs.append(rec)
+    xmlns = f"xmlns:{prefix}" if prefix else "xmlns"
     doc = (
         '<?xml version="1.0"?>\n'
-        '<export xmlns="http://icnarc.example/ns">'
+        f'<{p}export {xmlns}="http://icnarc.example/ns">'
         + "".join(parts)
-        + "</export>"
+        + f"</{p}export>"
     )
     return doc, recs
 
@@ -429,32 +447,34 @@ def test_parquet_footer_stats_pushes_aggregate(spark):
     assert after == before
 
 
-def test_python_datasource_xml_format(spark, tmp_path):
-    """S1 as a first-class format via the Spark 4 Python DataSource API:
-    same rows as the wholeTextFiles ingest, one partition per file."""
-    from icnarc_to_philips_linkage_spark.sources import pyds
-
-    doc, recs = _gen_wardwatcher_xml(50)
+def test_xml_reader_reads_prefixed_and_default_namespaces(spark, tmp_path):
+    """S1 over a directory of exports, one with prefixed and one with
+    default-namespace elements: the rows are the generator's records."""
+    doc, recs = _gen_wardwatcher_xml(50, prefix="icnarc")
     d = tmp_path / "exports"
     d.mkdir()
     (d / "a.xml").write_text(doc)
     doc2, recs2 = _gen_wardwatcher_xml(30)
     (d / "b.xml").write_text(doc2)
 
-    pyds.register(spark)
-    df = (
-        spark.read.format("wardwatcher_xml")
-        .option("rowTag", "patient")
-        .load(str(d))
-    )
+    codes = ["ICNARCNO", "CMPNO", "SEX", "HT", "WT", "SPARE"]
+    df = xml.read_icnarc_xml_raw(spark, str(d), codes)
     assert df.schema.simpleString() == "struct<cmp:map<string,string>>"
-    got = sorted(
-        tuple(sorted(r.cmp.items())) for r in df.collect()
-    )
-    baseline = xml.read_icnarc_xml_raw(spark, str(d / "*.xml"))
-    want = sorted(
-        tuple(sorted(r.cmp.items())) for r in baseline.collect()
-    )
+    got = sorted(tuple(sorted(r.cmp.items())) for r in df.collect())
+    want = sorted(tuple(sorted(r.items())) for r in recs + recs2)
     assert got == want and len(got) == 80
-    # file-granular parallelism: two files -> two partitions
-    assert df.rdd.getNumPartitions() == 2
+
+
+def test_xml_is_read_only_by_the_xml_source():
+    """One XML reader: no module in the package reads files whole or
+    parses XML in Python, so S1 stays on Spark's XML source."""
+    import pathlib
+
+    root = pathlib.Path(xml.__file__).resolve().parent.parent
+    stray = [
+        f"{path.relative_to(root)}:{no}"
+        for path in sorted(root.rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "wholeTextFiles" in line or "xml.etree" in line
+    ]
+    assert not stray, stray
